@@ -91,58 +91,16 @@ private[graft] object SubBagFit {
       subsampleRatio: Double,
       seed: Long,
       numClasses: Option[Int] = None): Option[Array[(Array[Int], EnsemblePredictionModelType)]] = {
-    import org.apache.spark.ml.classification.DecisionTreeClassifier
-    import org.apache.spark.ml.feature.Instance
-    import org.apache.spark.ml.regression.DecisionTreeRegressor
-    import org.apache.spark.ml.tree.impl.{
-      BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint
-    }
-
-    val cfg: Option[(org.apache.spark.mllib.tree.configuration.Strategy, Long)] =
-      learner match {
-        case dt: DecisionTreeRegressor => Some((dt.getOldStrategy(
-          org.apache.spark.ml.util.MetadataUtils
-            .getCategoricalFeatures(instances.schema("features"))), dt.getSeed))
-        case dt: DecisionTreeClassifier =>
-          // the caller MUST resolve numClasses (label metadata aware);
-          // deriving it here from max(label)+1 would disagree with the
-          // model's numClasses whenever metadata declares classes absent
-          // from the training rows
-          val k = numClasses.getOrElse(throw new IllegalArgumentException(
-            "runNativeTrees with a DecisionTreeClassifier requires the " +
-              "caller's metadata-resolved numClasses"))
-          Some((dt.getOldStrategy(
-            org.apache.spark.ml.util.MetadataUtils
-              .getCategoricalFeatures(instances.schema("features")), k), dt.getSeed))
-        case _ => None
-      }
-    cfg.map { case (strategy, treeSeed) =>
-      val sc = instances.sparkSession.sparkContext
-      val train = instances.select("label", "weight", "features").rdd
-        .map(r => Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)))
-      train.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val metadata =
-          DecisionTreeMetadata.buildMetadata(train, strategy, numLearners, "all")
-        val splits = GraftTreeShim.findSplits(train, metadata, treeSeed)
-        val bcSplits = sc.broadcast(splits)
-        val treePoints = TreePoint.convertToTreeRDD(train, splits, metadata)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val bagged = BaggedPoint.convertToBaggedRDD(
-          treePoints, subsampleRatio, numLearners, replacement,
-          (tp: TreePoint) => tp.weight, seed)
-        bagged.persist(StorageLevel.MEMORY_AND_DISK)
+    learner match {
+      case _: org.apache.spark.ml.regression.DecisionTreeRegressor |
+          _: org.apache.spark.ml.classification.DecisionTreeClassifier =>
+        val bt = new BinnedTrees(instances, learner, numClasses, numTrees = numLearners)
         try {
-          val full = Array.range(0, metadata.numFeatures)
-          RandomForest.runBagged(
-              bagged, metadata, bcSplits, strategy, numLearners, "all", treeSeed, None)
-            .map(m => (full, m.asInstanceOf[EnsemblePredictionModelType]))
-        } finally {
-          bagged.unpersist(blocking = false)
-          treePoints.unpersist(blocking = false)
-          bcSplits.destroy()
-        }
-      } finally train.unpersist(blocking = false)
+          val full = Array.range(0, bt.metadata.numFeatures)
+          Some(bt.runBagged(bt.points, subsampleRatio, numLearners, replacement, seed)
+            .map(m => (full, m.asInstanceOf[EnsemblePredictionModelType])))
+        } finally bt.close()
+      case _ => None
     }
   }
 

@@ -1,9 +1,8 @@
 package org.apache.spark.ml.graft
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.ml.classification.{
-  ProbabilisticClassificationModel, ProbabilisticClassifier
+  DecisionTreeClassificationModel, DecisionTreeClassifier, ProbabilisticClassificationModel,
+  ProbabilisticClassifier
 }
 import org.apache.spark.ml.impl.Utils.EPSILON
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
@@ -78,160 +77,113 @@ class BoostingClassifier(override val uid: String)
         dataset, $(labelCol),
         if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
       .withColumn("__bw", col("weight"))
+    val rounds = new Rounds[EnsemblePredictionModelType, Double](instr)
     $(baseLearner) match {
-      case dt: org.apache.spark.ml.classification.DecisionTreeClassifier
-          if $(nativeTreeFastPath) =>
-        return if ($(algorithm) == "discrete") trainNativeDT(instances, numClasses, dt)
-        else trainNativeSammeR(instances, numClasses, dt)
-      case _ => ()
+      case dt: DecisionTreeClassifier if $(nativeTreeFastPath) =>
+        val bt = new BinnedTrees(
+          instances, dt, Some(numClasses), $(checkpointInterval), unitWeights = true)
+        if ($(algorithm) == "discrete") trainNativeDT(bt, numClasses, rounds)
+        else trainNativeSammeR(bt, numClasses, rounds)
+      case _ => trainGeneric(instances, numClasses, rounds)
     }
+    new BoostingClassificationModel(
+      uid, numClasses, rounds.weights.toArray, rounds.members.toArray).setParent(this)
+  }
+
+  private def trainGeneric(
+      instances: DataFrame,
+      numClasses: Int,
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
     val loop = new IterLoopCache($(checkpointInterval))
     var df = loop.next(instances)
-
-    val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-    val modelWeights = ArrayBuffer.empty[Double]
-    var i = 0
-    var done = false
-    while (i < $(numBaseLearners) && !done) {
+    rounds.run($(numBaseLearners), loop) { _ =>
       val sumW = df.agg(sum("__bw")).head().getDouble(0)
       val weighted = df.withColumn("__bwn", col("__bw") / sumW)
       val model = Learners.fit($(baseLearner), weighted, "label", "features", Some("__bwn"), weightRequired = true)
-      $(algorithm) match {
-        case "discrete" =>
-          val predicted = Learners.transform(model, weighted, "__pred")
-          predicted.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val err = predicted
-              .agg(sum(when(col("__pred") =!= col("label"), col("__bwn")).otherwise(0.0)))
-              .head().getDouble(0)
-            if (err <= 0.0) {
-              models += model
-              modelWeights += 1.0
-              done = true
-            } else if (err >= 1.0 - 1.0 / numClasses) {
-              // worse than random under the SAMME bound: keep only if first
-              if (models.isEmpty) { models += model; modelWeights += 1.0 }
-              done = true
-            } else {
-              val alpha = math.log((1.0 - err) / err) + math.log(numClasses - 1.0)
-              models += model
-              modelWeights += alpha
-              val updated = predicted
-                .withColumn(
-                  "__bw",
-                  when(col("__pred") =!= col("label"), col("__bw") * math.exp(alpha))
-                    .otherwise(col("__bw")))
-                .select("label", "weight", "features", "__bw")
-              df = loop.next(updated)
-            }
-          } finally predicted.unpersist()
+      val predicted = $(algorithm) match {
+        case "discrete" => Learners.transform(model, weighted, "__pred")
         case "real" =>
           val prob = model.asInstanceOf[ProbabilisticClassificationModel[Vector, _]]
-          val pm = ParamMap(
+          prob.transform(weighted, ParamMap(
             prob.predictionCol.w("__pred"),
             prob.rawPredictionCol.w("__raw"),
-            prob.probabilityCol.w("__prob"))
-          val predicted = prob.transform(weighted, pm)
-          predicted.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val k = numClasses
-            val factorUdf = udf { (label: Double, p: Vector) =>
-              // w *= exp(-(K-1)/K * sum_k code_k * log p_k),
-              // code = 1 at the true class, -1/(K-1) elsewhere
-              var s = 0.0
-              val li = label.toInt
-              var j = 0
-              while (j < k) {
-                val pj = math.max(p(j), EPSILON)
-                val code = if (j == li) 1.0 else -1.0 / (k - 1.0)
-                s += code * math.log(pj)
-                j += 1
-              }
-              math.exp(-(k - 1.0) / k * s)
-            }
-            models += model
-            modelWeights += 1.0
-            // reference stops once the round's classifier is perfect on the
-            // weighted sample (classification/BoostingClassifier.scala:203-212)
-            val err = predicted
-              .agg(sum(when(col("__pred") =!= col("label"), col("__bwn")).otherwise(0.0)))
-              .head().getDouble(0)
-            if (err <= 0.0) done = true
-            else {
-              val updated = predicted
-                .withColumn("__bw", col("__bw") * factorUdf(col("label"), col("__prob")))
-                .select("label", "weight", "features", "__bw")
-              df = loop.next(updated)
-            }
-          } finally predicted.unpersist()
+            prob.probabilityCol.w("__prob")))
       }
-      i += 1
+      predicted.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val err = predicted
+          .agg(sum(when(col("__pred") =!= col("label"), col("__bwn")).otherwise(0.0)))
+          .head().getDouble(0)
+        val v = $(algorithm) match {
+          case "discrete" => Verdict.samme(err, numClasses, rounds.members.isEmpty)
+          case "real" => Verdict.sammeR(err)
+        }
+        if (v.keep) rounds.keep(model, v.weight)
+        if (!v.stop) {
+          val k = numClasses
+          val bw = $(algorithm) match {
+            case "discrete" =>
+              when(col("__pred") =!= col("label"), col("__bw") * math.exp(v.update))
+                .otherwise(col("__bw"))
+            case "real" =>
+              val factorUdf = udf { (label: Double, p: Vector) =>
+                // w *= exp(-(K-1)/K * sum_k code_k * log p_k),
+                // code = 1 at the true class, -1/(K-1) elsewhere
+                var s = 0.0
+                val li = label.toInt
+                var j = 0
+                while (j < k) {
+                  val pj = math.max(p(j), EPSILON)
+                  val code = if (j == li) 1.0 else -1.0 / (k - 1.0)
+                  s += code * math.log(pj)
+                  j += 1
+                }
+                math.exp(-(k - 1.0) / k * s)
+              }
+              col("__bw") * factorUdf(col("label"), col("__prob"))
+          }
+          df = loop.next(
+            predicted.withColumn("__bw", bw).select("label", "weight", "features", "__bw"))
+        }
+        RoundEnd(v.error, v.stop)
+      } finally predicted.unpersist()
     }
-    loop.close()
-    new BoostingClassificationModel(uid, numClasses, modelWeights.toArray, models.toArray)
-      .setParent(this)
   }
 
   /** Native-tree fast path for discrete SAMME (see
     * [[BoostingRegressor.trainNativeDT]] for the binning argument): one
-    * binning pass, per-round reweighting of the binned points, exact
-    * SAMME error/alpha recursion — misprediction via binned leaf lookup.
+    * binning pass, per-round reweighting of the binned points, the generic
+    * loop's round decision ([[Verdict.samme]]) — misprediction via binned
+    * leaf lookup.
     */
   private def trainNativeDT(
-      instances: DataFrame,
+      bt: BinnedTrees,
       numClasses: Int,
-      dtc: org.apache.spark.ml.classification.DecisionTreeClassifier): BoostingClassificationModel = {
-    import org.apache.spark.ml.classification.DecisionTreeClassificationModel
-    import org.apache.spark.rdd.RDD
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
+    val bw = new bt.RowState(bt.points.map(_.weight))
+    rounds.run($(numBaseLearners), bt) { i =>
+      val sw = BinnedTrees.orderedSum(bw.rdd)
+      val model = bt.fitReweighted(bw.rdd, sw, i).asInstanceOf[DecisionTreeClassificationModel]
 
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val boost = new NativeTreeBoost(
-      instances, dtc.getOldStrategy(categorical, numClasses), dtc.getSeed,
-      $(checkpointInterval))
-    try {
-      var bw: RDD[Double] = boost.initialWeights()
-      val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-      val modelWeights = ArrayBuffer.empty[Double]
-      var i = 0
-      var done = false
-      while (i < $(numBaseLearners) && !done) {
-        val sw = NativeTreeBoost.orderedSum(bw)
-        val model = boost.fitRound(bw, sw, boost.dtSeed + i)
-          .asInstanceOf[DecisionTreeClassificationModel]
-
-        // (mispredicted flag via binned leaf lookup, normalized bw, raw bw)
-        val bcSplits = boost.bcSplits
-        val data = boost.treePoints.zip(bw).map { case (tp, w) =>
-          val pred = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value).prediction
-          (pred != tp.label, w / sw, w)
-        }
-        data.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val err =
-            NativeTreeBoost.orderedSum(data.map { case (mis, bwn, _) => if (mis) bwn else 0.0 })
-          if (err <= 0.0) {
-            models += model
-            modelWeights += 1.0
-            done = true
-          } else if (err >= 1.0 - 1.0 / numClasses) {
-            if (models.isEmpty) {
-              models += model
-              modelWeights += 1.0
-            }
-            done = true
-          } else {
-            val alpha = math.log((1.0 - err) / err) + math.log(numClasses - 1.0)
-            models += model
-            modelWeights += alpha
-            bw = boost.advance(
-              data.map { case (mis, _, w) => if (mis) w * math.exp(alpha) else w })
-          }
-        } finally data.unpersist(blocking = false)
-        i += 1
+      // (mispredicted flag via binned leaf lookup, normalized bw, raw bw)
+      val bcSplits = bt.bcSplits
+      val data = bt.points.zip(bw.rdd).map { case (tp, w) =>
+        val pred = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value).prediction
+        (pred != tp.label, w / sw, w)
       }
-      new BoostingClassificationModel(uid, numClasses, modelWeights.toArray, models.toArray)
-        .setParent(this)
-    } finally boost.close()
+      data.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val err =
+          BinnedTrees.orderedSum(data.map { case (mis, bwn, _) => if (mis) bwn else 0.0 })
+        val v = Verdict.samme(err, numClasses, rounds.members.isEmpty)
+        if (v.keep) rounds.keep(model, v.weight)
+        if (!v.stop) {
+          val alpha = v.update
+          bw.advance(data.map { case (mis, _, w) => if (mis) w * math.exp(alpha) else w })
+        }
+        RoundEnd(v.error, v.stop)
+      } finally data.unpersist(blocking = false)
+    }
   }
 
   /** Native-tree fast path for SAMME.R: same bin-once scaffold as the
@@ -240,86 +192,65 @@ class BoostingClassifier(override val uid: String)
     * `DecisionTreeClassificationModel.predictProbability` returns) through
     * a binned leaf lookup, and applies Zhu et al.'s probability-coded
     * weight recursion (reference:
-    * classification/BoostingClassifier.scala:198-230). All models get
-    * weight 1.0; boosting stops early when a round's tree is perfect on
-    * the weighted sample.
+    * classification/BoostingClassifier.scala:198-230).
     */
   private def trainNativeSammeR(
-      instances: DataFrame,
+      bt: BinnedTrees,
       numClasses: Int,
-      dtc: org.apache.spark.ml.classification.DecisionTreeClassifier): BoostingClassificationModel = {
-    import org.apache.spark.ml.classification.DecisionTreeClassificationModel
-    import org.apache.spark.rdd.RDD
-
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val boost = new NativeTreeBoost(
-      instances, dtc.getOldStrategy(categorical, numClasses), dtc.getSeed,
-      $(checkpointInterval))
-    try {
-      var bw: RDD[Double] = boost.initialWeights()
-      val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-      val modelWeights = ArrayBuffer.empty[Double]
-      var i = 0
-      var done = false
-      while (i < $(numBaseLearners) && !done) {
-        val sw = NativeTreeBoost.orderedSum(bw)
-        val model = boost.fitRound(bw, sw, boost.dtSeed + i)
-          .asInstanceOf[DecisionTreeClassificationModel]
-        models += model
-        modelWeights += 1.0
-
-        val bcSplits = boost.bcSplits
-        val k = numClasses
-        // (normalized error contribution, next round's raw weight).
-        // The probability-coded score s(label) = Σ_j code_j·log(p_j) only
-        // depends on the LEAF and the label, so it is computed once per
-        // (leaf, label) in a per-partition identity cache instead of
-        // k logs + k divisions per ROW — trees have tens of leaves, rows
-        // are millions. Identity keying is safe here: within one task the
-        // deserialized tree is a single object graph, so equal leaves ARE
-        // the same reference. Expanded form of the score used below:
-        // s(li) = (k/(k-1))·log(p_li) − (Σ_j log p_j)/(k−1).
-        val data = boost.treePoints.zip(bw).mapPartitions { iter =>
-          val leafScores = new java.util.IdentityHashMap[AnyRef, Array[Double]]()
-          iter.map { case (tp, w) =>
-            val leaf = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value)
-            var s = leafScores.get(leaf)
-            if (s == null) {
-              val stats = leaf.impurityStats.stats
-              var tot = 0.0
-              var j = 0
-              while (j < k) { tot += stats(j); j += 1 }
-              val logs = new Array[Double](k)
-              var sumLog = 0.0
-              j = 0
-              while (j < k) {
-                logs(j) = math.log(math.max(stats(j) / tot, EPSILON))
-                sumLog += logs(j)
-                j += 1
-              }
-              s = new Array[Double](k)
-              j = 0
-              while (j < k) {
-                s(j) = (k / (k - 1.0)) * logs(j) - sumLog / (k - 1.0)
-                j += 1
-              }
-              leafScores.put(leaf, s)
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
+    val bw = new bt.RowState(bt.points.map(_.weight))
+    rounds.run($(numBaseLearners), bt) { i =>
+      val sw = BinnedTrees.orderedSum(bw.rdd)
+      val model = bt.fitReweighted(bw.rdd, sw, i).asInstanceOf[DecisionTreeClassificationModel]
+      val bcSplits = bt.bcSplits
+      val k = numClasses
+      // (normalized error contribution, next round's raw weight).
+      // The probability-coded score s(label) = Σ_j code_j·log(p_j) only
+      // depends on the LEAF and the label, so it is computed once per
+      // (leaf, label) in a per-partition identity cache instead of
+      // k logs + k divisions per ROW — trees have tens of leaves, rows
+      // are millions. Identity keying is safe here: within one task the
+      // deserialized tree is a single object graph, so equal leaves ARE
+      // the same reference. Expanded form of the score used below:
+      // s(li) = (k/(k-1))·log(p_li) − (Σ_j log p_j)/(k−1).
+      val data = bt.points.zip(bw.rdd).mapPartitions { iter =>
+        val leafScores = new java.util.IdentityHashMap[AnyRef, Array[Double]]()
+        iter.map { case (tp, w) =>
+          val leaf = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value)
+          var s = leafScores.get(leaf)
+          if (s == null) {
+            val stats = leaf.impurityStats.stats
+            var tot = 0.0
+            var j = 0
+            while (j < k) { tot += stats(j); j += 1 }
+            val logs = new Array[Double](k)
+            var sumLog = 0.0
+            j = 0
+            while (j < k) {
+              logs(j) = math.log(math.max(stats(j) / tot, EPSILON))
+              sumLog += logs(j)
+              j += 1
             }
-            val errContrib = if (leaf.prediction != tp.label) w / sw else 0.0
-            (errContrib, w * math.exp(-(k - 1.0) / k * s(tp.label.toInt)))
+            s = new Array[Double](k)
+            j = 0
+            while (j < k) {
+              s(j) = (k / (k - 1.0)) * logs(j) - sumLog / (k - 1.0)
+              j += 1
+            }
+            leafScores.put(leaf, s)
           }
+          val errContrib = if (leaf.prediction != tp.label) w / sw else 0.0
+          (errContrib, w * math.exp(-(k - 1.0) / k * s(tp.label.toInt)))
         }
-        data.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val err = NativeTreeBoost.orderedSum(data.map(_._1))
-          if (err <= 0.0) done = true
-          else bw = boost.advance(data.map(_._2))
-        } finally data.unpersist(blocking = false)
-        i += 1
       }
-      new BoostingClassificationModel(uid, numClasses, modelWeights.toArray, models.toArray)
-        .setParent(this)
-    } finally boost.close()
+      data.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val v = Verdict.sammeR(BinnedTrees.orderedSum(data.map(_._1)))
+        rounds.keep(model, v.weight)
+        if (!v.stop) bw.advance(data.map(_._2))
+        RoundEnd(v.error, v.stop)
+      } finally data.unpersist(blocking = false)
+    }
   }
 
   override def copy(extra: ParamMap): BoostingClassifier = defaultCopy(extra)

@@ -1,7 +1,5 @@
 package org.apache.spark.ml.graft
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.ml.PredictorParams
 import org.apache.spark.ml.graft.util.GraftUtils
 import org.apache.spark.ml.linalg.Vector
@@ -9,85 +7,16 @@ import org.apache.spark.ml.param.{Param, ParamMap, ParamValidators}
 import org.apache.spark.ml.param.shared.{
   HasAggregationDepth, HasCheckpointInterval, HasWeightCol
 }
-import org.apache.spark.ml.regression.{RegressionModel, Regressor}
+import org.apache.spark.ml.regression.{
+  DecisionTreeRegressionModel, DecisionTreeRegressor, RegressionModel, Regressor
+}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.json4s.DefaultFormats
 import org.json4s.JsonDSL._
-
-/** Iteration-state cache manager: persists the per-iteration weighted
-  * dataset, eagerly materializes it, drops the previous one, and truncates
-  * lineage every `checkpointInterval` iterations via a checkpoint —
-  * without it an N-iteration boosting loop carries O(N) plan depth
-  * (reference uses PeriodicRDDCheckpointer: regression/BoostingRegressor
-  * .scala:202-206).
-  *
-  * Checkpoint mode follows the session: when
-  * `SparkContext.setCheckpointDir` is set, iterations checkpoint RELIABLY
-  * to that directory (data survives executor loss — at 1000 executors
-  * with dynamic allocation, localCheckpoint's cached-blocks-only contract
-  * is a real failure mode), keeping the latest two checkpoints and
-  * deleting older files exactly like the reference's
-  * PeriodicRDDCheckpointer. Without a checkpoint dir it falls back to
-  * localCheckpoint (single-JVM / test mode).
-  */
-private[graft] class IterLoopCache(checkpointInterval: Int) {
-  private var prev: DataFrame = _
-  private var iter = 0
-  private val checkpointFiles = scala.collection.mutable.Queue.empty[String]
-
-  private def release(df: DataFrame): Unit = {
-    // Dataset.unpersist is a no-op on localCheckpoint blocks (they bypass
-    // the CacheManager) — free the underlying RDD cache explicitly or each
-    // checkpointed iteration's full dataset lingers in executor storage.
-    // Safe here: the successor iteration is already materialized, so the
-    // freed lineage is never re-entered (reliable checkpoint files are
-    // managed separately and outlive the cached blocks).
-    df.unpersist()
-    org.apache.spark.sql.graft.DatasetUtils.freeCheckpointBlocks(df)
-  }
-
-  def next(df: DataFrame): DataFrame = {
-    iter += 1
-    val out =
-      if (checkpointInterval > 0 && iter % checkpointInterval == 0) {
-        if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-          val cp = df.checkpoint(eager = true)
-          org.apache.spark.sql.graft.DatasetUtils.checkpointFile(cp)
-            .foreach(checkpointFiles.enqueue(_))
-          // keep the newest checkpoint plus its predecessor (persisted
-          // successor blocks may still recompute through it on loss) —
-          // the PeriodicRDDCheckpointer retention policy
-          while (checkpointFiles.size > 2) {
-            org.apache.spark.sql.graft.DatasetUtils
-              .deleteCheckpointFile(checkpointFiles.dequeue(), cp)
-          }
-          cp
-        } else df.localCheckpoint(true)
-      } else { df.persist(StorageLevel.MEMORY_AND_DISK); df.count(); df }
-    if (prev != null) release(prev)
-    prev = out
-    out
-  }
-
-  /** Callers collect every per-iteration result before closing, so both
-    * the cached blocks and any remaining reliable checkpoint files are
-    * dead weight by now — free them all.
-    */
-  def close(): Unit = if (prev != null) {
-    val last = prev
-    release(prev)
-    prev = null
-    while (checkpointFiles.nonEmpty) {
-      org.apache.spark.sql.graft.DatasetUtils
-        .deleteCheckpointFile(checkpointFiles.dequeue(), last)
-    }
-  }
-}
 
 private[graft] trait BoostingRegressorParams
     extends PredictorParams
@@ -152,20 +81,21 @@ class BoostingRegressor(override val uid: String)
         dataset, $(labelCol),
         if (isDefined(weightCol)) Some($(weightCol)) else None, $(featuresCol))
       .withColumn("__bw", col("weight"))
+    val rounds = new Rounds[EnsemblePredictionModelType, Double](instr)
     $(baseLearner) match {
-      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) =>
-        return trainNativeDT(instances, dt)
-      case _ => ()
+      case dt: DecisionTreeRegressor if $(nativeTreeFastPath) => trainNativeDT(instances, dt, rounds)
+      case _ => trainGeneric(instances, rounds)
     }
+    new BoostingRegressionModel(uid, rounds.weights.toArray, rounds.members.toArray)
+      .setParent(this)
+  }
+
+  private def trainGeneric(
+      instances: DataFrame,
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
     val loop = new IterLoopCache($(checkpointInterval))
     var df = loop.next(instances)
-
-    val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-    val modelWeights = ArrayBuffer.empty[Double]
-    var i = 0
-    var done = false
-    while (i < $(numBaseLearners) && !done) {
+    rounds.run($(numBaseLearners), loop) { _ =>
       val sumW = df.agg(sum("__bw")).head().getDouble(0)
       val weighted = df.withColumn("__bwn", col("__bw") / sumW)
       val model = Learners.fit($(baseLearner), weighted, "label", "features", Some("__bwn"), weightRequired = true)
@@ -175,44 +105,27 @@ class BoostingRegressor(override val uid: String)
       predicted.persist(StorageLevel.MEMORY_AND_DISK)
       try {
         val maxError = predicted.agg(max("__err")).head().getDouble(0)
-        if (maxError == 0.0) {
-          // perfect fit: keep it with full confidence and stop early
-          models += model
-          modelWeights += 1.0
-          done = true
-        } else {
-          val lossCol = $(lossType) match {
-            case "linear" => col("__err") / maxError
-            case "squared" => pow(col("__err") / maxError, 2)
-            case "exponential" => lit(1.0) - exp(-col("__err") / maxError)
-          }
-          val withLoss = predicted.withColumn("__loss", lossCol)
-          val estimatorError =
-            withLoss.agg(sum(col("__bwn") * col("__loss"))).head().getDouble(0)
-          if (estimatorError >= 0.5) {
-            // boosting assumption broken: keep the model only if it is the
-            // first (so the ensemble is non-empty, voting with full weight
-            // like the classifier's degenerate case), then stop
-            if (models.isEmpty) {
-              models += model
-              modelWeights += 1.0
-            }
-            done = true
-          } else {
-            val beta = estimatorError / (1.0 - estimatorError)
-            models += model
-            modelWeights += math.log(1.0 / beta)
-            val updated = withLoss
-              .withColumn("__bw", col("__bw") * pow(lit(beta), lit(1.0) - col("__loss")))
-              .select("label", "weight", "features", "__bw")
-            df = loop.next(updated)
-          }
+        // Column pow/exp run StrictMath; the bin-once closures run
+        // math.pow/math.exp — each backend keeps its own arithmetic
+        val lossCol = $(lossType) match {
+          case "linear" => col("__err") / maxError
+          case "squared" => pow(col("__err") / maxError, 2)
+          case "exponential" => lit(1.0) - exp(-col("__err") / maxError)
         }
+        val withLoss = predicted.withColumn("__loss", lossCol)
+        val v = Verdict.r2(
+          maxError,
+          withLoss.agg(sum(col("__bwn") * col("__loss"))).head().getDouble(0),
+          rounds.members.isEmpty)
+        if (v.keep) rounds.keep(model, v.weight)
+        if (!v.stop) {
+          df = loop.next(withLoss
+            .withColumn("__bw", col("__bw") * pow(lit(v.update), lit(1.0) - col("__loss")))
+            .select("label", "weight", "features", "__bw"))
+        }
+        RoundEnd(v.error, v.stop)
       } finally predicted.unpersist()
-      i += 1
     }
-    loop.close()
-    new BoostingRegressionModel(uid, modelWeights.toArray, models.toArray).setParent(this)
   }
 
   /** Native-tree fast path for AdaBoost.R2: bin features once, reweight
@@ -223,70 +136,46 @@ class BoostingRegressor(override val uid: String)
     * the induction through the TreePoint weights. The generic path
     * recomputes weighted split candidates per round — a per-round
     * threshold-grid refinement the fixed grid approximates, traded for
-    * removing numBaseLearners-1 full binning passes. The weight recursion
-    * (normalized loss, beta, log(1/beta) model weights, early-stop
-    * conditions) is identical to the generic loop line for line.
+    * removing numBaseLearners-1 full binning passes. The round decision is
+    * the generic loop's ([[Verdict.r2]]).
     */
   private def trainNativeDT(
       instances: DataFrame,
-      dt: org.apache.spark.ml.regression.DecisionTreeRegressor): BoostingRegressionModel = {
-    import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-    import org.apache.spark.rdd.RDD
+      dt: DecisionTreeRegressor,
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
+    val bt = new BinnedTrees(
+      instances, dt, checkpointInterval = $(checkpointInterval), unitWeights = true)
+    val bw = new bt.RowState(bt.points.map(_.weight))
+    rounds.run($(numBaseLearners), bt) { i =>
+      val sw = BinnedTrees.orderedSum(bw.rdd)
+      val model = bt.fitReweighted(bw.rdd, sw, i).asInstanceOf[DecisionTreeRegressionModel]
 
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val boost = new NativeTreeBoost(
-      instances, dt.getOldStrategy(categorical), dt.getSeed, $(checkpointInterval))
-    try {
-      var bw: RDD[Double] = boost.initialWeights()
-      val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-      val modelWeights = ArrayBuffer.empty[Double]
-      var i = 0
-      var done = false
-      while (i < $(numBaseLearners) && !done) {
-        val sw = NativeTreeBoost.orderedSum(bw)
-        val model = boost.fitRound(bw, sw, boost.dtSeed + i)
-          .asInstanceOf[DecisionTreeRegressionModel]
-
-        // (absolute error via binned prediction, normalized bw, raw bw)
-        val bcSplits = boost.bcSplits
-        val data = boost.treePoints.zip(bw).map { case (tp, w) =>
-          val pred = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value).prediction
-          (math.abs(pred - tp.label), w / sw, w)
-        }
-        data.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val maxError = data.map(_._1).max()
-          if (maxError == 0.0) {
-            models += model
-            modelWeights += 1.0
-            done = true
-          } else {
-            val lossFn: Double => Double = $(lossType) match {
-              case "linear" => e => e / maxError
-              case "squared" => e => (e / maxError) * (e / maxError)
-              case "exponential" => e => 1.0 - math.exp(-e / maxError)
-            }
-            val estimatorError =
-              NativeTreeBoost.orderedSum(data.map { case (e, bwn, _) => bwn * lossFn(e) })
-            if (estimatorError >= 0.5) {
-              if (models.isEmpty) {
-                models += model
-                modelWeights += 1.0
-              }
-              done = true
-            } else {
-              val beta = estimatorError / (1.0 - estimatorError)
-              models += model
-              modelWeights += math.log(1.0 / beta)
-              bw = boost.advance(
-                data.map { case (e, _, w) => w * math.pow(beta, 1.0 - lossFn(e)) })
-            }
-          }
-        } finally data.unpersist(blocking = false)
-        i += 1
+      // (absolute error via binned prediction, normalized bw, raw bw)
+      val bcSplits = bt.bcSplits
+      val data = bt.points.zip(bw.rdd).map { case (tp, w) =>
+        val pred = model.rootNode.predictBinned(tp.binnedFeatures, bcSplits.value).prediction
+        (math.abs(pred - tp.label), w / sw, w)
       }
-      new BoostingRegressionModel(uid, modelWeights.toArray, models.toArray).setParent(this)
-    } finally boost.close()
+      data.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val maxError = data.map(_._1).max()
+        val lossFn: Double => Double = $(lossType) match {
+          case "linear" => e => e / maxError
+          case "squared" => e => (e / maxError) * (e / maxError)
+          case "exponential" => e => 1.0 - math.exp(-e / maxError)
+        }
+        val v = Verdict.r2(
+          maxError,
+          BinnedTrees.orderedSum(data.map { case (e, bwn, _) => bwn * lossFn(e) }),
+          rounds.members.isEmpty)
+        if (v.keep) rounds.keep(model, v.weight)
+        if (!v.stop) {
+          val beta = v.update
+          bw.advance(data.map { case (e, _, w) => w * math.pow(beta, 1.0 - lossFn(e)) })
+        }
+        RoundEnd(v.error, v.stop)
+      } finally data.unpersist(blocking = false)
+    }
   }
 
   override def copy(extra: ParamMap): BoostingRegressor = defaultCopy(extra)

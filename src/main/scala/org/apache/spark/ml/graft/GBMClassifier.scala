@@ -1,6 +1,5 @@
 package org.apache.spark.ml.graft
 
-import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.Future
 import scala.concurrent.duration.Duration
 
@@ -15,8 +14,11 @@ import org.apache.spark.ml.impl.Utils.EPSILON
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.HasParallelism
+import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
+import org.apache.spark.ml.tree.impl.{BaggedPoint, GradientBoostedTrees => NativeGBT, TreePoint}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -108,23 +110,10 @@ class GBMClassifier(override val uid: String)
       lossB: GBMClassificationLoss,
       dim: Int): Array[Double] = {
     if (dim == 1 && lossB.isInstanceOf[HasHessian]) {
-      // bracketed Newton (see GBMRegressor.lineSearch): convex phi, so
-      // phi'(a)'s sign maintains a [lo, hi] bracket; bisect whenever the
-      // raw Newton step escapes it (margin-loss hessians vanish at large
-      // margins, which would otherwise make the step oscillate)
       val h = lossB.asInstanceOf[GBMClassificationLoss with HasHessian]
       val depth = $(aggregationDepth)
-      var lo = 0.0
-      var hi = 100.0
-      var loProbed = false
-      var hiProbed = false
-      var a = 1.0
-      var it = 0
-      var converged = false
-      var failed = false
-      while (it < 12 && !converged && !failed) {
-        val step = a
-        val (dphi, d2phi) = rdd.treeAggregate((0.0, 0.0))(
+      return Array(BracketedNewton($(tol)) { step =>
+        rdd.treeAggregate((0.0, 0.0))(
           seqOp = { case ((accG, accH), (yenc, f, dir, w)) =>
             val fa = Array(f(0) + step * dir(0))
             (accG + w * h.gradient(yenc, fa)(0) * dir(0),
@@ -132,26 +121,7 @@ class GBMClassifier(override val uid: String)
           },
           combOp = (x, y) => (x._1 + y._1, x._2 + y._2),
           depth = depth)
-        if (!dphi.isFinite || !d2phi.isFinite) failed = true
-        else {
-          val wantRight = dphi <= 0
-          if (dphi > 0) { hi = a; hiProbed = true } else { lo = a; loProbed = true }
-          val newton = if (d2phi > 0) a - dphi / d2phi else Double.NaN
-          // see GBMRegressor.lineSearch: probe a not-yet-probed clamp
-          // directly when the step escapes toward it — near-constant
-          // directions put the constrained optimum AT the clamp, and
-          // bisection would spend log2(range/tol) passes getting there
-          val next =
-            if (newton.isFinite && newton > lo && newton < hi) newton
-            else if (wantRight && !hiProbed) hi
-            else if (!wantRight && !loProbed) lo
-            else (lo + hi) / 2.0
-          if (math.abs(next - a) < $(tol) || hi - lo < $(tol)) converged = true
-          a = next
-        }
-        it += 1
-      }
-      return if (failed) Array(1.0) else Array(a)
+      })
     }
     lossB match {
       case fh: GBMClassificationLoss with HasFullHessian =>
@@ -387,15 +357,27 @@ class GBMClassifier(override val uid: String)
     // same fast-path gate as GBMRegressor: bin-once is only valid when the
     // instance weights (and so the weighted split candidates) are
     // iteration-invariant — gradient updates, full feature space
+    val rounds = new Rounds[Array[EnsemblePredictionModelType], Array[Double]](instr)
     $(baseLearner) match {
-      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 &&
-            $(updates) == "gradient" =>
-        return trainNativeDT(instances, init, numClasses, gbmLoss, nf, hasVal, dt)
-      case _ => ()
+      case dt: DecisionTreeRegressor
+          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
+        trainNativeDT(instances, init, gbmLoss, nf, hasVal, dt, rounds)
+      case _ =>
+        trainGeneric(instances, init, gbmLoss, nf, hasVal, rounds)
     }
+    new GBMClassificationModel(
+      uid, numClasses, init, rounds.weights.toArray, rounds.subspaces.toArray,
+      rounds.members.toArray).setParent(this)
+  }
 
-    val lossB = gbmLoss
+  private def trainGeneric(
+      instances: DataFrame,
+      init: Array[Double],
+      lossB: GBMClassificationLoss,
+      nf: Int,
+      hasVal: Boolean,
+      rounds: Rounds[Array[EnsemblePredictionModelType], Array[Double]]): Unit = {
+    val dim = lossB.dim
     val encodeUdf = udf { (y: Double) => lossB.encodeLabel(y) }
     val initLit = array(init.toIndexedSeq.map(lit(_)): _*)
     val loop = new IterLoopCache($(checkpointInterval))
@@ -404,17 +386,9 @@ class GBMClassifier(override val uid: String)
         .withColumn("__yenc", encodeUdf(col("label")))
         .withColumn("__f", initLit)
         .select("label", "weight", "features", "__val", "__yenc", "__f"))
-
-    val models = ArrayBuffer.empty[Array[EnsemblePredictionModelType]]
-    val modelWeights = ArrayBuffer.empty[Array[Double]]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
-    var i = 0
-    var done = false
     val ec = getExecutionContext
 
-    while (i < $(maxIter) && !done) {
+    rounds.run($(maxIter), loop) { i =>
       val newton = $(updates) == "newton"
       val residUdf = udf { (yenc: Seq[Double], f: Seq[Double]) =>
         lossB.negativeGradient(yenc.toArray, f.toArray).toSeq
@@ -504,9 +478,7 @@ class GBMClassifier(override val uid: String)
         }
 
       val w = stepVec.map(_ * $(learningRate))
-      models += dimModels
-      modelWeights += w
-      subspaces += indices
+      rounds.keep(dimModels, w, indices)
 
       val wLit = array(w.toIndexedSeq.map(lit(_)): _*)
       val updateUdf = udf { (f: Seq[Double], dir: Seq[Double], ww: Seq[Double]) =>
@@ -529,32 +501,9 @@ class GBMClassifier(override val uid: String)
             sum(col("weight") * lossUdf(col("__yenc"), col("__f"))).as("l"),
             sum("weight").as("w"))
           .head()
-        if (!agg.isNullAt(0)) {
-          val vloss = agg.getDouble(0) / agg.getDouble(1)
-          // first finite loss always establishes the baseline (see
-          // GBMRegressor: Inf-arithmetic would mis-count round one)
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
+        rounds.validate(agg, $(numRounds), $(validationTol))
+      } else RoundEnd.next
     }
-    loop.close()
-    new GBMClassificationModel(
-      uid, numClasses, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
   }
 
   /** Native-tree fast path for the K-dim loop (see
@@ -571,70 +520,24 @@ class GBMClassifier(override val uid: String)
   private def trainNativeDT(
       instances: DataFrame,
       init: Array[Double],
-      numClasses: Int,
-      gbmLoss: GBMClassificationLoss,
+      lossB: GBMClassificationLoss,
       nf: Int,
       hasVal: Boolean,
-      dt: org.apache.spark.ml.regression.DecisionTreeRegressor): GBMClassificationModel = {
-    import org.apache.spark.ml.feature.Instance
-    import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-    import org.apache.spark.ml.tree.impl.{
-      BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint,
-      GradientBoostedTrees => NativeGBT
-    }
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
-
-    val lossB = gbmLoss
+      dt: DecisionTreeRegressor,
+      rounds: Rounds[Array[EnsemblePredictionModelType], Array[Double]]): Unit = {
     val dim = lossB.dim
-    val sc = instances.sparkSession.sparkContext
-    val withVal = instances.select("label", "weight", "features", "__val").rdd
-      .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3)))
-    withVal.persist(StorageLevel.MEMORY_AND_DISK)
-    val train = withVal.filter(!_._2).map(_._1)
-    val valid = withVal.filter(_._2).map(_._1)
-
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val strategy = dt.getOldStrategy(categorical)
-    val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
-    val splits = GraftTreeShim.findSplits(train, metadata, dt.getSeed)
-    val bcSplits = sc.broadcast(splits)
-    val treePoints = TreePoint.convertToTreeRDD(train, splits, metadata)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val valPoints =
-      if (hasVal) TreePoint.convertToTreeRDD(valid, splits, metadata)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      else null
-
-    val fCk = new PeriodicRDDCheckpointer[Array[Double]]($(checkpointInterval), sc)
-    val valCk =
-      if (hasVal) new PeriodicRDDCheckpointer[Array[Double]]($(checkpointInterval), sc)
-      else null
-    var f: RDD[Array[Double]] = treePoints.map(_ => init.clone())
-    fCk.update(f)
-    f.count()
-    var valF: RDD[Array[Double]] =
-      if (hasVal) {
-        val p = valPoints.map(_ => init.clone())
-        valCk.update(p)
-        p.count()
-        p
-      } else null
-
-    val models = ArrayBuffer.empty[Array[EnsemblePredictionModelType]]
-    val modelWeights = ArrayBuffer.empty[Array[Double]]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
-    var i = 0
-    var done = false
+    val bt = new BinnedTrees(
+      instances, dt, checkpointInterval = $(checkpointInterval), validation = hasVal)
+    val f = new bt.RowState(bt.points.map(_ => init.clone()))
+    val valF = if (hasVal) new bt.RowState(bt.validPoints.map(_ => init.clone())) else null
+    val bcSplits = bt.bcSplits
     val ec = getExecutionContext
 
-    while (i < $(maxIter) && !done) {
+    rounds.run($(maxIter), bt) { i =>
       // K-dim negative gradient + joint subsample, computed ONCE for all
       // classes (the generic path samples once and shares fitBase the same
       // way — parity matters for the per-class fits seeing identical rows)
-      val resid: RDD[(TreePoint, Array[Double])] = treePoints.zip(f).map { case (tp, fr) =>
+      val resid = bt.points.zip(f.rdd).map { case (tp, fr) =>
         (tp, lossB.negativeGradient(lossB.encodeLabel(tp.label), fr))
       }
       val bagged = BaggedPoint.convertToBaggedRDD(
@@ -642,27 +545,22 @@ class GBMClassifier(override val uid: String)
         (t: (TreePoint, Array[Double])) => t._1.weight, $(seed) + i)
       bagged.persist(StorageLevel.MEMORY_AND_DISK)
 
-      val dimModels: Array[EnsemblePredictionModelType] =
+      val treeModels: Array[DecisionTreeRegressionModel] =
         try {
           val futures = Array.tabulate(dim) { k =>
             Future {
-              val baggedK = bagged.map { bp =>
+              bt.grow(bagged.map { bp =>
                 new BaggedPoint(
                   new TreePoint(bp.datum._2(k), bp.datum._1.binnedFeatures, bp.datum._1.weight),
                   bp.subsampleCounts, bp.sampleWeight)
-              }
-              RandomForest.runBagged(
-                  baggedK, metadata, bcSplits, strategy, 1, "all", dt.getSeed, None)
-                .head.asInstanceOf[DecisionTreeRegressionModel]
-                .asInstanceOf[EnsemblePredictionModelType]
+              }).head.asInstanceOf[DecisionTreeRegressionModel]
             }(ec)
           }
           futures.map(ThreadUtils.awaitResult(_, Duration.Inf))
         } finally bagged.unpersist(blocking = false)
 
-      val treeModels = dimModels.map(_.asInstanceOf[DecisionTreeRegressionModel])
       val data: RDD[(Array[Double], Array[Double], Array[Double], Double)] =
-        treePoints.zip(f).map { case (tp, fr) =>
+        bt.points.zip(f.rdd).map { case (tp, fr) =>
           val d = Array.tabulate(dim)(k =>
             NativeGBT.updatePrediction(tp, 0.0, treeModels(k), 1.0, bcSplits.value))
           (lossB.encodeLabel(tp.label), fr, d, tp.weight)
@@ -674,23 +572,20 @@ class GBMClassifier(override val uid: String)
         else stepVectorSearch(data, lossB, dim)
 
       val w = stepVec.map(_ * $(learningRate))
-      models += dimModels
-      modelWeights += w
-      subspaces += GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
+      rounds.keep(
+        treeModels.map(_.asInstanceOf[EnsemblePredictionModelType]), w,
+        GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i))
 
-      val newF = data.map { case (_, fr, d, _) =>
+      f.advance(data.map { case (_, fr, d, _) =>
         val out = new Array[Double](fr.length)
         var j = 0
         while (j < fr.length) { out(j) = fr(j) + w(j) * d(j); j += 1 }
         out
-      }
-      fCk.update(newF)
-      newF.count()
+      })
       data.unpersist(blocking = false)
-      f = newF
 
       if (hasVal) {
-        val newValF = valPoints.zip(valF).map { case (tp, fr) =>
+        valF.advance(bt.validPoints.zip(valF.rdd).map { case (tp, fr) =>
           val out = new Array[Double](fr.length)
           var j = 0
           while (j < fr.length) {
@@ -698,47 +593,16 @@ class GBMClassifier(override val uid: String)
             j += 1
           }
           out
-        }
-        valCk.update(newValF)
-        newValF.count()
-        valF = newValF
-        val (lsum, wsum) = valPoints.zip(valF).treeAggregate((0.0, 0.0))(
+        })
+        val (lsum, wsum) = bt.validPoints.zip(valF.rdd).treeAggregate((0.0, 0.0))(
           (acc, t) => (
             acc._1 + t._1.weight * lossB.loss(lossB.encodeLabel(t._1.label), t._2),
             acc._2 + t._1.weight),
           (a, b) => (a._1 + b._1, a._2 + b._2),
           $(aggregationDepth))
-        if (wsum > 0) {
-          val vloss = lsum / wsum
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
+        rounds.validate(lsum, wsum, $(numRounds), $(validationTol))
+      } else RoundEnd.next
     }
-
-    fCk.unpersistDataSet()
-    fCk.deleteAllCheckpoints()
-    if (valCk != null) { valCk.unpersistDataSet(); valCk.deleteAllCheckpoints() }
-    treePoints.unpersist(blocking = false)
-    if (valPoints != null) valPoints.unpersist(blocking = false)
-    withVal.unpersist(blocking = false)
-    bcSplits.destroy()
-    new GBMClassificationModel(
-      uid, numClasses, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
   }
 
   override def copy(extra: ParamMap): GBMClassifier = defaultCopy(extra)

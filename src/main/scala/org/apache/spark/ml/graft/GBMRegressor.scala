@@ -1,7 +1,5 @@
 package org.apache.spark.ml.graft
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.commons.math3.optim.MaxEval
 import org.apache.commons.math3.optim.nonlinear.scalar.GoalType
 import org.apache.commons.math3.optim.univariate.{
@@ -15,7 +13,10 @@ import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{
   HasAggregationDepth, HasCheckpointInterval, HasMaxIter, HasWeightCol
 }
-import org.apache.spark.ml.regression.{RegressionModel, Regressor}
+import org.apache.spark.ml.regression.{
+  DecisionTreeRegressionModel, DecisionTreeRegressor, RegressionModel, Regressor
+}
+import org.apache.spark.ml.tree.impl.{GradientBoostedTrees => NativeGBT, TreePoint}
 import org.apache.spark.ml.util._
 import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -191,14 +192,17 @@ class GBMRegressor(override val uid: String)
     // newton updates reweight rows by the hessian each round, giving the
     // generic path iteration-specific weighted split candidates the
     // bin-once representation cannot reproduce
+    val rounds = new Rounds[EnsemblePredictionModelType, Double](instr)
     $(baseLearner) match {
-      case dt: org.apache.spark.ml.regression.DecisionTreeRegressor
-          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 &&
-            $(updates) == "gradient" =>
-        trainNativeDT(instances, init, nf, hasVal, dt)
+      case dt: DecisionTreeRegressor
+          if $(nativeTreeFastPath) && $(subspaceRatio) >= 1.0 && $(updates) == "gradient" =>
+        trainNativeDT(instances, init, nf, hasVal, dt, rounds)
       case _ =>
-        trainGeneric(instances, init, nf, hasVal)
+        trainGeneric(instances, init, nf, hasVal, rounds)
     }
+    new GBMRegressionModel(
+      uid, init, rounds.weights.toArray, rounds.subspaces.toArray, rounds.members.toArray)
+      .setParent(this)
   }
 
   /** Per-iteration step size over cached (label, f, direction, weight)
@@ -225,23 +229,9 @@ class GBMRegressor(override val uid: String)
       if (den <= 0 || !num.isFinite) 1.0
       else math.min(math.max(num / den, 0.0), 100.0)
     } else if (lossB.isInstanceOf[HasScalarHessian]) {
-      // bracketed Newton: phi is convex, so the sign of phi'(a) tells
-      // which side of the optimum a is on — keep a shrinking [lo, hi]
-      // bracket and fall back to its midpoint whenever the Newton step
-      // escapes it (logcosh's hessian ~ 0 in saturated regions makes the
-      // raw step oscillate between the clamps)
       val h = lossB.asInstanceOf[GBMRegressionLoss with HasScalarHessian]
-      var lo = 0.0
-      var hi = 100.0
-      var loProbed = false
-      var hiProbed = false
-      var a = 1.0
-      var it = 0
-      var converged = false
-      var failed = false
-      while (it < 12 && !converged && !failed) {
-        val step = a
-        val (dphi, d2phi) = data.treeAggregate((0.0, 0.0))(
+      BracketedNewton($(tol)) { step =>
+        data.treeAggregate((0.0, 0.0))(
           (acc, t) => {
             val f = t._2 + step * t._3
             (acc._1 + t._4 * t._3 * h.gradient(t._1, f),
@@ -249,26 +239,7 @@ class GBMRegressor(override val uid: String)
           },
           (x, y) => (x._1 + y._1, x._2 + y._2),
           depth)
-        if (!dphi.isFinite || !d2phi.isFinite) failed = true
-        else {
-          val wantRight = dphi <= 0
-          if (dphi > 0) { hi = a; hiProbed = true } else { lo = a; loProbed = true }
-          val newton = if (d2phi > 0) a - dphi / d2phi else Double.NaN
-          // convex phi: a step escaping toward a NOT-yet-probed clamp means
-          // the optimum may BE the clamp (near-constant directions put it
-          // there) — probe the clamp directly, one pass, instead of
-          // bisecting toward it in log2(range/tol) passes
-          val next =
-            if (newton.isFinite && newton > lo && newton < hi) newton
-            else if (wantRight && !hiProbed) hi
-            else if (!wantRight && !loProbed) lo
-            else (lo + hi) / 2.0
-          if (math.abs(next - a) < $(tol) || hi - lo < $(tol)) converged = true
-          a = next
-        }
-        it += 1
       }
-      if (failed) 1.0 else a
     } else {
       data.count()
       val objective = new UnivariateObjectiveFunction(a =>
@@ -292,26 +263,19 @@ class GBMRegressor(override val uid: String)
       instances: DataFrame,
       init: EnsemblePredictionModelType,
       nf: Int,
-      hasVal: Boolean): GBMRegressionModel = {
+      hasVal: Boolean,
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
     val loop = new IterLoopCache($(checkpointInterval))
     var df = loop.next(
       Learners.transform(init, instances, "__f")
         .select("label", "weight", "features", "__val", "__f"))
-
-    val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-    val modelWeights = ArrayBuffer.empty[Double]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
     // early stopping needs a STATIONARY metric: huber's delta refreshes
     // every round, so comparing losses computed under different deltas
     // would be apples-to-oranges — freeze the first round's loss object
     // for all validation evaluations
     var valLossObj: GBMRegressionLoss = null
-    var i = 0
-    var done = false
 
-    while (i < $(maxIter) && !done) {
+    rounds.run($(maxIter), loop) { i =>
       // Huber delta refresh: alpha-quantile of current absolute residuals
       val currentLoss: GBMRegressionLoss =
         if ($(loss) == "huber") {
@@ -384,16 +348,12 @@ class GBMRegressor(override val uid: String)
         }
 
       val w = $(learningRate) * stepAlpha
-      models += model
-      modelWeights += w
-      subspaces += indices
-
+      rounds.keep(model, w, indices)
       df = loop.next(
         withDir
           .withColumn("__f", col("__f") + lit(w) * col("__d"))
           .select("label", "weight", "features", "__val", "__f"))
 
-      // validation early stop
       if (hasVal) {
         if (valLossObj == null) valLossObj = lossB
         val frozen = valLossObj
@@ -403,36 +363,9 @@ class GBMRegressor(override val uid: String)
             sum(col("weight") * lossUdf(col("label"), col("__f"))).as("l"),
             sum("weight").as("w"))
           .head()
-        if (agg.isNullAt(0)) {
-          // no validation rows; ignore
-        } else {
-          val vloss = agg.getDouble(0) / agg.getDouble(1)
-          // the first finite loss always establishes the baseline (Inf -
-          // vloss > tol*Inf is false, which would mis-count round one as
-          // a failure)
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              // drop the non-improving tail (reference: take(i - v),
-              // regression/GBMRegressor.scala:474)
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
+        rounds.validate(agg, $(numRounds), $(validationTol))
+      } else RoundEnd.next
     }
-    loop.close()
-    new GBMRegressionModel(uid, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
   }
 
   /** Native-tree fast path: bin features ONCE (metadata + findSplits +
@@ -453,66 +386,24 @@ class GBMRegressor(override val uid: String)
       init: EnsemblePredictionModelType,
       nf: Int,
       hasVal: Boolean,
-      dt: org.apache.spark.ml.regression.DecisionTreeRegressor): GBMRegressionModel = {
-    import org.apache.spark.ml.feature.Instance
-    import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-    import org.apache.spark.ml.tree.impl.{
-      BaggedPoint, DecisionTreeMetadata, GraftTreeShim, RandomForest, TreePoint,
-      GradientBoostedTrees => NativeGBT
-    }
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.rdd.util.PeriodicRDDCheckpointer
-
-    val spark = instances.sparkSession
-    val sc = spark.sparkContext
-    val withVal = instances.select("label", "weight", "features", "__val").rdd
-      .map(r => (Instance(r.getDouble(0), r.getDouble(1), r.getAs[Vector](2)), r.getBoolean(3)))
-    withVal.persist(StorageLevel.MEMORY_AND_DISK)
-    val train = withVal.filter(!_._2).map(_._1)
-    val valid = withVal.filter(_._2).map(_._1)
-
-    val categorical = MetadataUtils.getCategoricalFeatures(instances.schema("features"))
-    val strategy = dt.getOldStrategy(categorical)
-    val metadata = DecisionTreeMetadata.buildMetadata(train, strategy, numTrees = 1, "all")
-    val splits = GraftTreeShim.findSplits(train, metadata, dt.getSeed)
-    val bcSplits = sc.broadcast(splits)
-    val treePoints = TreePoint.convertToTreeRDD(train, splits, metadata)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val valPoints =
-      if (hasVal) TreePoint.convertToTreeRDD(valid, splits, metadata)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      else null
-
-    val predCk = new PeriodicRDDCheckpointer[Double]($(checkpointInterval), sc)
-    val valCk =
-      if (hasVal) new PeriodicRDDCheckpointer[Double]($(checkpointInterval), sc) else null
-    var pred: RDD[Double] = train.map(inst => init.predict(inst.features))
-    predCk.update(pred)
-    pred.count()
-    var valPred: RDD[Double] =
-      if (hasVal) {
-        val p = valid.map(inst => init.predict(inst.features))
-        valCk.update(p)
-        p.count()
-        p
-      } else null
-
-    val models = ArrayBuffer.empty[EnsemblePredictionModelType]
-    val modelWeights = ArrayBuffer.empty[Double]
-    val subspaces = ArrayBuffer.empty[Array[Int]]
-    var bestValLoss = Double.PositiveInfinity
-    var badRounds = 0
+      dt: DecisionTreeRegressor,
+      rounds: Rounds[EnsemblePredictionModelType, Double]): Unit = {
+    val bt = new BinnedTrees(
+      instances, dt, checkpointInterval = $(checkpointInterval), validation = hasVal)
+    val pred = new bt.RowState(bt.train.map(inst => init.predict(inst.features)))
+    val valPred =
+      if (hasVal) new bt.RowState(bt.valid.map(inst => init.predict(inst.features))) else null
+    val bcSplits = bt.bcSplits
     var valLossObj: GBMRegressionLoss = null
-    var i = 0
-    var done = false
 
-    while (i < $(maxIter) && !done) {
+    rounds.run($(maxIter), bt) { i =>
       // Huber delta refresh — same alpha-quantile of |residual|, same
       // approx tolerance as the generic path
       val currentLoss: GBMRegressionLoss =
         if ($(loss) == "huber") {
-          val absr = treePoints.zip(pred).map { case (tp, f) => math.abs(tp.label - f) }
-          val d = spark.createDataset(absr)(org.apache.spark.sql.Encoders.scalaDouble)
+          val absr = bt.points.zip(pred.rdd).map { case (tp, f) => math.abs(tp.label - f) }
+          val d = instances.sparkSession
+            .createDataset(absr)(org.apache.spark.sql.Encoders.scalaDouble)
             .toDF("__absr")
             .stat.approxQuantile("__absr", Array($(alpha)), 0.001).head
           lossObj(math.max(d, 1e-6))
@@ -523,22 +414,15 @@ class GBMRegressor(override val uid: String)
       // relabel the binned points with -grad — a narrow map over cached
       // data, THE payoff of the fast path (newton never reaches here: its
       // hessian reweighting needs per-iteration weighted split candidates)
-      val relabeled = treePoints.zip(pred).map { case (tp, f) =>
+      val relabeled = bt.points.zip(pred.rdd).map { case (tp, f) =>
         new TreePoint(-lossB.gradient(tp.label, f), tp.binnedFeatures, tp.weight)
       }
-      val bagged = BaggedPoint.convertToBaggedRDD(
-        relabeled, $(subsampleRatio), 1, $(replacement),
-        (tp: TreePoint) => tp.weight, $(seed) + i)
-      bagged.persist(StorageLevel.MEMORY_AND_DISK)
-      val model =
-        try RandomForest.runBagged(
-            bagged, metadata, bcSplits, strategy, 1, "all", dt.getSeed, None)
-          .head.asInstanceOf[DecisionTreeRegressionModel]
-        finally bagged.unpersist(blocking = false)
+      val model = bt.runBagged(relabeled, $(subsampleRatio), 1, $(replacement), $(seed) + i)
+        .head.asInstanceOf[DecisionTreeRegressionModel]
 
       // per-row direction via binned prediction (exactly equivalent to
       // Vector prediction for points binned with the fitted splits)
-      val data = treePoints.zip(pred).map { case (tp, f) =>
+      val data = bt.points.zip(pred.rdd).map { case (tp, f) =>
         (tp.label, f, NativeGBT.updatePrediction(tp, 0.0, model, 1.0, bcSplits.value), tp.weight)
       }
       data.persist(StorageLevel.MEMORY_AND_DISK)
@@ -547,59 +431,23 @@ class GBMRegressor(override val uid: String)
         else lineSearch(data, lossB)
 
       val w = $(learningRate) * stepAlpha
-      models += model
-      modelWeights += w
-      subspaces += GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i)
-
-      val newPred = data.map(t => t._2 + w * t._3)
-      predCk.update(newPred)
-      newPred.count()
+      rounds.keep(model, w, GraftUtils.subspace($(subspaceRatio), nf, $(seed) + i))
+      pred.advance(data.map(t => t._2 + w * t._3))
       data.unpersist(blocking = false)
-      pred = newPred
 
       if (hasVal) {
-        val newValPred = valPoints.zip(valPred).map { case (tp, f) =>
+        valPred.advance(bt.validPoints.zip(valPred.rdd).map { case (tp, f) =>
           f + w * NativeGBT.updatePrediction(tp, 0.0, model, 1.0, bcSplits.value)
-        }
-        valCk.update(newValPred)
-        newValPred.count()
-        valPred = newValPred
+        })
         if (valLossObj == null) valLossObj = lossB
         val frozen = valLossObj
-        val (lsum, wsum) = valPoints.zip(valPred).treeAggregate((0.0, 0.0))(
+        val (lsum, wsum) = bt.validPoints.zip(valPred.rdd).treeAggregate((0.0, 0.0))(
           (acc, t) => (acc._1 + t._1.weight * frozen.loss(t._1.label, t._2), acc._2 + t._1.weight),
           (a, b) => (a._1 + b._1, a._2 + b._2),
           $(aggregationDepth))
-        if (wsum > 0) {
-          val vloss = lsum / wsum
-          if (bestValLoss.isPosInfinity ||
-            bestValLoss - vloss > $(validationTol) * math.max(math.abs(bestValLoss), 1e-12)) {
-            bestValLoss = vloss
-            badRounds = 0
-          } else {
-            badRounds += 1
-            if (badRounds >= $(numRounds)) {
-              val keep = math.max(models.length - badRounds, 1)
-              models.dropRightInPlace(models.length - keep)
-              modelWeights.dropRightInPlace(modelWeights.length - keep)
-              subspaces.dropRightInPlace(subspaces.length - keep)
-              done = true
-            }
-          }
-        }
-      }
-      i += 1
+        rounds.validate(lsum, wsum, $(numRounds), $(validationTol))
+      } else RoundEnd.next
     }
-
-    predCk.unpersistDataSet()
-    predCk.deleteAllCheckpoints()
-    if (valCk != null) { valCk.unpersistDataSet(); valCk.deleteAllCheckpoints() }
-    treePoints.unpersist(blocking = false)
-    if (valPoints != null) valPoints.unpersist(blocking = false)
-    withVal.unpersist(blocking = false)
-    bcSplits.destroy()
-    new GBMRegressionModel(uid, init, modelWeights.toArray, subspaces.toArray, models.toArray)
-      .setParent(this)
   }
 
   override def copy(extra: ParamMap): GBMRegressor = defaultCopy(extra)

@@ -109,7 +109,8 @@ class BoostingGoldenSuite extends SparkSpec {
     "samme_r_generic" -> (() => samme("real", false)),
     "samme_r_native" -> (() => samme("real", true)))
 
-  // recorded before the boosting loops were folded onto one round driver
+  // regenerate only for an intended change to a fitted model; a failing
+  // case prints its new literal
   private val expected: Map[String, Golden] = Map(
     "gbm_reg_generic" -> Golden(
       4,

@@ -101,4 +101,28 @@ class InstrumentationSuite extends SparkSpec {
       assert(logs.exists(_.contains(name)), s"$name: no pipeline-stage log")
     }
   }
+
+  test("boosting loops log one record per round: index, weight, statistic, ms") {
+    val dt = () => new DecisionTreeRegressor().setMaxDepth(2).setSeed(1)
+    val record = """boosting round (\d+): weight=(\S+) stat=(\S+) ms=(\d+)""".r.unanchored
+    def records(fit: => Unit): Seq[(Int, String, Double)] =
+      captureInstrumentation(fit).collect { case record(i, w, stat, _) => (i.toInt, w, stat.toDouble) }
+
+    // AdaBoost.R2 on the bin-once path: the statistic is the round's error
+    val ada = records(new BoostingRegressor().setBaseLearner(dt()).setNumBaseLearners(3).fit(df))
+    assert(ada.map(_._1) === Seq(0, 1, 2))
+    assert(ada.forall { case (_, w, err) => w.toDouble > 0 && err >= 0 && err < 0.5 }, ada)
+
+    // GBM with a validation split: the statistic is the validation loss
+    val withVal = df.withColumn("isVal", org.apache.spark.sql.functions.rand(3) > 0.7)
+    val gbm = records(new GBMRegressor().setBaseLearner(dt()).setMaxIter(3).setSeed(1)
+      .setValidationIndicatorCol("isVal").setNumRounds(3).fit(withVal))
+    assert(gbm.map(_._1) === Seq(0, 1, 2))
+    assert(gbm.forall { case (_, w, loss) => w.toDouble > 0 && loss > 0 }, gbm)
+
+    // K-dim GBM logs the step vector
+    val cls = records(new GBMClassifier().setBaseLearner(dt()).setMaxIter(2).setSeed(1).fit(clsDf))
+    assert(cls.map(_._1) === Seq(0, 1))
+    assert(cls.forall { case (_, w, loss) => w.startsWith("[") && loss.isNaN }, cls)
+  }
 }

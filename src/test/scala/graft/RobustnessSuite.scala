@@ -94,6 +94,73 @@ class RobustnessSuite extends SparkSpec {
     assert(gbm.transform(df).select("prediction").count() === 300)
     val leftover = rddDirs().map(_.getName).toSet -- before
     assert(leftover.isEmpty, s"GBM fast path leaked checkpoints: $leftover")
+
+    // 3) a fit that throws mid-loop (the base learner's second fit fails)
+    //    must still release its loop caches and checkpoint files
+    val failing: Seq[(String, () => Any)] = Seq(
+      "BoostingRegressor" -> (() => new BoostingRegressor()
+        .setBaseLearner(new SecondFitFailsTree().setMaxDepth(2))
+        .setNumBaseLearners(4)
+        .setCheckpointInterval(1)
+        .setNativeTreeFastPath(false)
+        .fit(df)),
+      "GBMRegressor" -> (() => new org.apache.spark.ml.graft.GBMRegressor()
+        .setBaseLearner(new SecondFitFailsTree().setMaxDepth(2))
+        .setMaxIter(4)
+        .setCheckpointInterval(1)
+        .setNativeTreeFastPath(false)
+        .fit(df)))
+    for ((name, fit) <- failing) {
+      val dirsBefore = rddDirs().map(_.getName).toSet
+      val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+      SecondFitFailsTree.fits.set(0)
+      val e = intercept[IllegalStateException](fit())
+      assert(SecondFitFailsTree.fits.get() === 2, s"$name: ${e.getMessage}")
+      val dirsLeft = rddDirs().map(_.getName).toSet -- dirsBefore
+      assert(dirsLeft.isEmpty, s"failed $name fit leaked checkpoints: $dirsLeft")
+      val rddsLeft = sc.getPersistentRDDs.keySet.toSet -- rddsBefore
+      assert(rddsLeft.isEmpty, s"failed $name fit leaked persisted RDDs: $rddsLeft")
+    }
+  }
+
+  test("a bin-once fit that fails while binning leaks no cached instances") {
+    val sc = spark.sparkContext
+    val fits: Seq[(String, () => Any)] = Seq(
+      // all-zero instance weights fail the bin-once AdaBoost precondition
+      "BoostingRegressor" -> (() => new BoostingRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setWeightCol("w")
+        .fit(df.withColumn("w", lit(0.0)))),
+      // no rows: tree metadata rejects the empty input
+      "BaggingRegressor" -> (() => new BaggingRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .fit(df.limit(0))))
+    for ((name, fit) <- fits) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      intercept[IllegalArgumentException](fit())
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"failed $name fit leaked persisted RDDs: $left")
+    }
+  }
+
+  test("zero-weight validation rows do not stop a GBM fit early (both paths)") {
+    // every validation row has weight 0: the validation loss is 0/0, so no
+    // round may count as non-improving
+    val zeroVal = df
+      .withColumn("isVal", monotonically_increasing_id() % 3 === 0)
+      .withColumn("w", when(col("isVal"), 0.0).otherwise(1.0))
+    for (fast <- Seq(true, false)) {
+      val m = new org.apache.spark.ml.graft.GBMRegressor()
+        .setBaseLearner(new DecisionTreeRegressor().setMaxDepth(2))
+        .setMaxIter(4)
+        .setWeightCol("w")
+        .setValidationIndicatorCol("isVal")
+        .setNumRounds(1)
+        .setNativeTreeFastPath(fast)
+        .setSeed(1L)
+        .fit(zeroVal)
+      assert(m.models.length === 4, s"fast=$fast stopped at ${m.models.length} members")
+    }
   }
 
   test("instance weights steer boosting") {
@@ -273,4 +340,24 @@ class RobustnessSuite extends SparkSpec {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new org.apache.spark.sql.graft.GraftExtensions()(ext) // must not throw
   }
+}
+
+/** A DecisionTreeRegressor whose second fit (counted across the copies
+  * `fit(df, paramMap)` makes) throws, to fail a boosting loop mid-way.
+  */
+class SecondFitFailsTree(uid: String) extends DecisionTreeRegressor(uid) {
+  def this() = this(org.apache.spark.ml.util.Identifiable.randomUID("secondFitFails"))
+
+  override protected def train(
+      dataset: org.apache.spark.sql.Dataset[_]
+  ): org.apache.spark.ml.regression.DecisionTreeRegressionModel = {
+    if (SecondFitFailsTree.fits.incrementAndGet() == 2) {
+      throw new IllegalStateException("second fit fails")
+    }
+    super.train(dataset)
+  }
+}
+
+object SecondFitFailsTree {
+  val fits = new java.util.concurrent.atomic.AtomicInteger(0)
 }
