@@ -122,7 +122,7 @@ private[graft] final class Rounds[M, W](instr: Instrumentation) {
     kept = Some(weight)
   }
 
-  def run(maxRounds: Int, state: AutoCloseable)(round: Int => RoundEnd): this.type = {
+  def run(maxRounds: Int, state: AutoCloseable)(round: Int => RoundEnd): Unit =
     try {
       var i = 0
       var stop = false
@@ -140,8 +140,6 @@ private[graft] final class Rounds[M, W](instr: Instrumentation) {
         i += 1
       }
     } finally state.close()
-    this
-  }
 
   /** Validation early stop on the weighted validation loss lsum / wsum.
     * A round with no validation weight is skipped (0/0 must not become
