@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetUtils.materializeAtLeaf
 import org.apache.spark.sql.graft.ShingleHashesFn.shingle_hashes
 
 import TextFunctions.tokens
@@ -244,6 +245,11 @@ object Decontaminate {
     * these; near-dup decontamination is the Dolma/FineWeb-style
     * complement.
     *
+    * Precondition: `idCol` is unique in `docs` and `evalIdCol` in
+    * `evalDocs`. Each doc's shingle count is a group count per id over
+    * the exploded index, so a duplicated id sums the shingles of all its
+    * rows and changes every Jaccard computed for it.
+    *
     * Output: `(doc_id, n_eval_matches, max_jaccard)` with one row PER
     * TRAINING DOC (`n_eval_matches = 0`, null `max_jaccard` for clean
     * docs — thresholding already happened, the report is the audit
@@ -274,6 +280,28 @@ object Decontaminate {
       shingleSize: Int = 3,
       threshold: Double = 0.5,
       corpusBanded: Option[DataFrame] = None): DataFrame = {
+    val (out, persisted) = nearDupContaminationReportLazy(docs, idCol, textCol,
+      evalDocs, evalIdCol, evalTextCol, numHashes, bands, shingleSize, threshold,
+      corpusBanded)
+    materializeAtLeaf(out, persisted: _*)
+  }
+
+  /** Un-materialized [[nearDupContaminationReport]] plan plus the frames
+    * it persists (caller must unpersist) — PlanSuite pins the plan shape
+    * on this.
+    */
+  private[graft] def nearDupContaminationReportLazy(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      evalDocs: DataFrame,
+      evalIdCol: String,
+      evalTextCol: String,
+      numHashes: Int,
+      bands: Int,
+      shingleSize: Int,
+      threshold: Double,
+      corpusBanded: Option[DataFrame]): (DataFrame, Seq[DataFrame]) = {
     require(threshold > 0 && threshold <= 1,
       s"threshold=$threshold must be in (0, 1]")
     val cBand = corpusBanded.getOrElse(
@@ -327,17 +355,7 @@ object Decontaminate {
       .select(col("doc_id"),
         coalesce(col("n_eval_matches"), lit(0L)).as("n_eval_matches"),
         col("max_jaccard"))
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false)
-      cands.unpersist(blocking = false); eSh.unpersist(blocking = false)
-      cSh.unpersist(blocking = false)
-      throw e
-    }
-    cands.unpersist(blocking = false); eSh.unpersist(blocking = false)
-    cSh.unpersist(blocking = false)
-    out
+    (out, Seq(cands, eSh, cSh))
   }
 
   /** Semantic (embedding-level) decontamination — the FOURTH

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetUtils.{materializeAtLeaf, materializeAtLeafCounting}
 
 /** Deduplication operators for web-scale corpora. Every variant is built
   * on the same scalable skeleton: per-row signatures (narrow, codegen'd)
@@ -12,43 +13,22 @@ import org.apache.spark.sql.functions._
   * whose expected multiplicity is controlled by the banding parameters.
   *
   * Cache lifetime: operators persist intermediates (shingle/signature
-  * tables) only for their own duration — each pipeline materializes its
-  * (candidate-bounded, small) result with an action and then releases the
-  * intermediates, so a long-lived session running many dedups holds at
-  * most the final pair sets, never the full inverted indexes.
+  * tables) only for their own duration — each pipeline runs its
+  * (candidate-bounded, small) result once through
+  * `DatasetUtils.materializeAtLeaf` and then releases the intermediates,
+  * so a long-lived session running many dedups holds at most the final
+  * pair sets, never the full inverted indexes. The returned result is
+  * persisted, materialized and rooted at a single leaf (its plan does not
+  * carry the stages that built it, so a composed chain's plans stay the
+  * size of one stage); callers own it — `unpersist()` it, or
+  * `spark.catalog.clearCache()` between passes as Bench/Verify do. The
+  * price is eagerness: the pipeline runs at call time, and filters
+  * composed on the returned frame do not push into it (dedup output
+  * pruning is threshold-side, which IS a parameter).
   */
 object Dedup {
 
   import TextFunctions._
-
-  /** Persist + materialize `result`, then free the persisted
-    * `intermediates` it was built from. The result of every dedup pipeline
-    * is candidate-bounded (pairs, not corpus), so caching it is cheap; the
-    * intermediates (shingle inverted index, signatures, banded tables) are
-    * corpus-sized and must not outlive the operator in a long-lived
-    * session (round-2's bench showed the leak compounding across queries).
-    *
-    * Callers OWN the returned (persisted) result: `result.unpersist()` it
-    * when done — or `spark.catalog.clearCache()` between passes, as
-    * Bench/Verify do — so many dedup calls in one session don't
-    * accumulate pair sets. The price of this contract is eagerness: the
-    * pipeline runs at call time, so filters composed on the returned
-    * DataFrame don't push into it (dedup output pruning is threshold-side,
-    * which IS a parameter, so nothing of value is lost).
-    */
-  private def materializeAndRelease(
-      result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    result.persist()
-    try result.count()
-    catch {
-      case e: Throwable =>
-        result.unpersist(blocking = false)
-        intermediates.foreach(_.unpersist(blocking = false))
-        throw e
-    }
-    intermediates.foreach(_.unpersist(blocking = false))
-    result
-  }
 
   /** Exact dedup: canonical row = min(id) per normalized text. One
     * hash-shuffle on the (hashed) text; at 100 TB you'd pre-hash to a
@@ -197,11 +177,9 @@ object Dedup {
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
     edges.persist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-    var backing = labels // the persisted DataFrame behind `labels`
-    backing.persist()
-    backing.count()
+    var backing = materializeAtLeaf( // the persisted leaf behind `labels`
+      edges.select(col("src").as("id")).distinct().withColumn("component", col("id")))
+    var labels = backing
     var iter = 0
     var changed = 1L
     while (iter < maxIter && changed > 0) {
@@ -216,7 +194,7 @@ object Dedup {
           when(col("nmin") < col("component"), col("nmin"))
             .otherwise(col("component")).as("component"))
       // pointer jumping: component := label(component). The lookup maps
-      // through the PREVIOUS round's labels (the persisted RDD-backed
+      // through the PREVIOUS round's labels (the persisted leaf-rooted
       // frame) rather than `propagated` itself — self-joining the
       // unpersisted `propagated` would evaluate its join+agg subtree
       // twice per round. Every label value is a vertex id present in the
@@ -238,18 +216,17 @@ object Dedup {
           col("old"),
           coalesce(least(col("component"), col("jump")), col("component"))
             .as("component"))
-      proposed.persist()
-      changed = proposed.filter(col("component") =!= col("old")).count()
-      backing.unpersist(blocking = false) // proposed is materialized
-      backing = proposed
-      // rebuild from the persisted RDD to RESET the Catalyst plan: the
-      // round's plan embeds the previous labels twice (directly and via
-      // msgs), so chaining DataFrames doubles the plan tree every round —
-      // analysis time goes exponential while the data stays tiny. The RDD
-      // DAG shares nodes (it's a DAG, not a tree) and recompute stops at
-      // the persisted blocks, so this is purely a planner-cost reset.
-      val slim = proposed.select("id", "component")
-      labels = proposed.sparkSession.createDataFrame(slim.rdd, slim.schema)
+      // materialize the round at a leaf (the changed-count is the
+      // materializing action) and free the previous round's labels. The
+      // leaf RESETS the Catalyst plan: the round's plan embeds the
+      // previous labels twice (directly and via msgs), so chaining
+      // DataFrames would double the plan tree every round — analysis time
+      // goes exponential while the data stays tiny.
+      val (next, n) = materializeAtLeafCounting(
+        proposed, _.filter(col("component") =!= col("old")).count(), backing)
+      changed = n
+      backing = next
+      labels = next.select("id", "component")
       iter += 1
     }
     val converged = changed == 0
@@ -270,7 +247,7 @@ object Dedup {
     }
     // `labels` is a projection over the last round's persisted frame; hand
     // the caller its own persisted copy and release the loop's blocks
-    (materializeAndRelease(labels, edges, backing), iter, converged)
+    (materializeAtLeaf(labels, edges, backing), iter, converged)
   }
 
   /** Near-dup-deduplicated corpus: one canonical (min-id) row survives per
@@ -286,7 +263,7 @@ object Dedup {
     val comps = connectedComponents(pairs, aCol, bCol)
     val losers = comps.filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
-    materializeAndRelease(df.join(losers, Seq(idCol), "left_anti"), comps)
+    materializeAtLeaf(df.join(losers, Seq(idCol), "left_anti"), comps)
   }
 
   /** Like [[nearDupCorpus]] but each dup cluster keeps its
@@ -312,7 +289,7 @@ object Dedup {
     val losers = ranked.withColumn("__rk", row_number().over(w))
       .filter(col("__rk") > 1)
       .select(col("id").as(idCol))
-    materializeAndRelease(df.join(losers, Seq(idCol), "left_anti"), comps)
+    materializeAtLeaf(df.join(losers, Seq(idCol), "left_anti"), comps)
   }
 
   /** Exact n-gram Jaccard similar pairs >= threshold via the
@@ -333,7 +310,7 @@ object Dedup {
       maxDocFrequency: Long = 0L): DataFrame = {
     val (pairs, sh) =
       ngramJaccardPairsLazy(df, idCol, textCol, n, threshold, maxDocFrequency)
-    materializeAndRelease(pairs, sh)
+    materializeAtLeaf(pairs, sh)
   }
 
   /** The un-materialized plan behind [[ngramJaccardPairs]] plus the
@@ -419,7 +396,7 @@ object Dedup {
   def minhashCandidatePairs(
       signatures: DataFrame, bands: Int, numHashes: Int): DataFrame = {
     val (cands, banded) = minhashCandidatePairsLazy(signatures, bands, numHashes)
-    materializeAndRelease(cands, banded)
+    materializeAtLeaf(cands, banded)
   }
 
   /** Band-explode a signature frame into (carry..., band, bucket) — the
@@ -486,7 +463,7 @@ object Dedup {
       .withColumn("est_jaccard", round(agree / numHashes, 6))
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
-    materializeAndRelease(out, sigs, cands)
+    materializeAtLeaf(out, sigs, cands)
   }
 
   /** Exact-Jaccard verification of an LSH candidate pair set: join the
@@ -504,6 +481,22 @@ object Dedup {
       pairs: DataFrame, // (doc_a, doc_b) — persisted by every caller
       shingleSize: Int,
       threshold: Double): DataFrame = {
+    val (verified, sh) =
+      verifyPairsExactJaccardLazy(df, idCol, textCol, pairs, shingleSize, threshold)
+    materializeAtLeaf(verified, sh)
+  }
+
+  /** Un-materialized verify plan plus the shingle index it persists (see
+    * [[ngramJaccardPairsLazy]]) — CandidateBoundedVerifySuite pins the
+    * candidate prune on this plan.
+    */
+  private[graft] def verifyPairsExactJaccardLazy(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      pairs: DataFrame,
+      shingleSize: Int,
+      threshold: Double): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.graft.ShingleHashesFn.shingle_hashes
     // candidate-bounded index (r16): only docs that appear in a candidate
     // pair are re-tokenized and shingled — the semi-join keeps the
@@ -534,7 +527,7 @@ object Dedup {
         col("c").cast("double") / (col("sa.n") + col("sb.n") - col("c")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-    materializeAndRelease(verified, sh)
+    (verified, sh)
   }
 
   /** MinHash near-dup pipeline with EXACT verification: banding proposes
@@ -618,15 +611,14 @@ object Dedup {
       corpusBanded: Option[DataFrame] = None): DataFrame = {
     val (cands0, all, banded) = incrementalCandidatesLazy(
       corpus, batch, idCol, textCol, numHashes, bands, shingleSize, corpusBanded)
-    // persist + count + release-banded with failure-path cleanup
-    val cands = materializeAndRelease(cands0, banded)
+    val cands = materializeAtLeaf(cands0, banded)
     val verified = verifyPairsExactJaccard(all, "id", "text", cands, shingleSize, threshold)
     val victims = verified.select(col("doc_b").as(idCol)).distinct()
     val out = batch.join(victims, Seq(idCol), "left_anti")
     // release the persisted frames themselves (verified, not its
     // projection — unpersisting a derived plan would leave the cached
     // blocks behind)
-    materializeAndRelease(out, cands, verified)
+    materializeAtLeaf(out, cands, verified)
   }
 
   /** The corpus-linear banding artifact the 100 TB incremental shape
@@ -878,7 +870,7 @@ object Dedup {
     // needed as a table by itself
     val out = simhashCandidates(sigs, maxHamming, numBlocks, maxBucketFrequency)
       .filter(col("hamming") <= maxHamming)
-    materializeAndRelease(out, sigs)
+    materializeAtLeaf(out, sigs)
   }
 
   /** Embedding near-dup pairs above a cosine threshold. `bruteForce` is

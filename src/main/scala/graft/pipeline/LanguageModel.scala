@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetUtils.materializeAtLeaf
 
 import TextFunctions.tokens
 
@@ -159,15 +160,7 @@ object LanguageModel {
     val uni = unigramCounts(modelDocs, modelTextCol).persist()
     val big = bigramCounts(modelDocs, modelTextCol).persist()
     val out = scoreDocs(docs, idCol, textCol, uni, big, alpha, broadcastModel)
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false)
-      uni.unpersist(blocking = false); big.unpersist(blocking = false)
-      throw e
-    }
-    uni.unpersist(blocking = false); big.unpersist(blocking = false)
-    out
+    materializeAtLeaf(out, uni, big)
   }
 
   /** A driver-collected bigram model for map-side scoring. Bounded by

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetUtils.materializeAtLeaf
 import org.apache.spark.sql.graft.TopKRows.topk_rows
 
 import TextFunctions.tokens
@@ -115,13 +116,7 @@ object Retrieval {
       bm25Staged(docs, idCol, textCol, queries, queryIdCol, queryTextCol, k, k1, b)
     // materialize the (queries x k)-sized result, then free the pruned
     // posting cache — the Dedup operators' release discipline
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false); postQ.unpersist(blocking = false); throw e
-    }
-    postQ.unpersist(blocking = false)
-    out
+    materializeAtLeaf(out, postQ)
   }
 
   /** The two corpus scalars a persisted BM25 index must store next to
@@ -162,13 +157,7 @@ object Retrieval {
       .select(lit(nDocs).as("n_docs"), lit(totalTokens).as("total_tokens"))
     val postQ = postings.join(broadcast(qtok), Seq("token")).persist()
     val out = rankPruned(postQ, qterms, statsDf, k, k1, b)
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false); postQ.unpersist(blocking = false); throw e
-    }
-    postQ.unpersist(blocking = false)
-    out
+    materializeAtLeaf(out, postQ)
   }
 
   private def queryTerms(
@@ -393,13 +382,7 @@ object Retrieval {
       weights: Seq[Double] = Nil): DataFrame = {
     val (out, postQ) = hybridStaged(
       docs, idCol, textCol, queries, queryIdCol, queryTextCol, k, k1, b, rrfK, weights)
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false); postQ.unpersist(blocking = false); throw e
-    }
-    postQ.unpersist(blocking = false)
-    out
+    materializeAtLeaf(out, postQ)
   }
 
   /** [[hybridTopK]] without the materialize/release step (plan tests). */
@@ -536,13 +519,7 @@ object Retrieval {
       .select(col("query_id"), posexplode(col("top")).as(Seq("p", "t")))
       .select(col("query_id"), col("t.doc_id").as("doc_id"),
         col("t.score").as("score"), (col("p") + 1).cast("long").as("rnk"))
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false); ranked.unpersist(blocking = false); throw e
-    }
-    ranked.unpersist(blocking = false)
-    out
+    materializeAtLeaf(out, ranked)
   }
 
   /** Lexical ⊕ dense hybrid retrieval — THE production hybrid-search
@@ -590,13 +567,7 @@ object Retrieval {
     val (out, postQ) = hybridDenseStaged(docs, idCol, textCol, queries, queryIdCol,
       queryTextCol, vecCorpus, vecIdCol, vecCol, vecQueries, k, k1, b,
       numCentroids, nprobe, rrfK, weights)
-    out.persist()
-    try out.count()
-    catch { case e: Throwable =>
-      out.unpersist(blocking = false); postQ.unpersist(blocking = false); throw e
-    }
-    postQ.unpersist(blocking = false)
-    out
+    materializeAtLeaf(out, postQ)
   }
 
   /** [[hybridDenseTopK]] without the materialize/release step (plan

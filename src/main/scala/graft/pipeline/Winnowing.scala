@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetUtils.materializeAtLeaf
 import org.apache.spark.sql.graft.GraftExpressions.{codePointFnv32, opaque}
 
 import TextFunctions.tokens
@@ -166,9 +167,7 @@ object Winnowing {
         .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
-      pairs.persist()
-      pairs.count()
-      pairs
+      materializeAtLeaf(pairs)
     } finally fpAll.unpersist(blocking = false)
   }
 }

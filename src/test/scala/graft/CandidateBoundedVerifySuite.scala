@@ -2,7 +2,13 @@ package graft
 
 import graft.pipeline.{Decontaminate, Dedup}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ShingleHashes
 
 /** Pins the r16 candidate-bounded verification: the exact-Jaccard verify
   * stage (and the near-dup contamination report's corpus side) semi-join
@@ -12,7 +18,8 @@ import org.apache.spark.sql.functions._
   * result — verified pair sets and per-doc reports are identical to the
   * exact corpus-wide computation, including on corpora where most docs
   * have NO candidates and would previously still have been shingled —
-  * and (b) that the pruning semi-join is actually in the executed plan.
+  * and (b) that the pruning semi-join sits below the shingle-index explode
+  * in the verify query's executed plan.
   */
 class CandidateBoundedVerifySuite extends SparkSpec {
 
@@ -58,16 +65,38 @@ class CandidateBoundedVerifySuite extends SparkSpec {
     exact.unpersist(blocking = false)
   }
 
+  /** Every node of a physical plan, descending into AQE wrappers, query
+    * stages and the cached plans behind in-memory scans.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case _ => p.children.flatMap(nodes)
+  })
+
   test("the verify stage's shingle index is candidate-bounded (LeftSemi in plan)") {
-    // minhashPairsVerified materializes its result, so the executed plan
-    // embeds the cached verify subtree — the semi-join that prunes the
-    // corpus to candidate ids must appear there
-    val verified = Dedup.minhashPairsVerified(docs, "doc_id", "text", 64, 16,
-      shingleSize = 3, threshold = 0.5)
-    val plan = verified.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"),
-      s"verify-side corpus scan is no longer candidate-pruned:\n$plan")
-    verified.unpersist(blocking = false)
+    // the verify query's own plan (the returned result is a leaf): every
+    // shingle explode must sit above the semi-join that prunes the corpus
+    // to candidate ids — a semi-join elsewhere in the plan does not count
+    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 64, 3).persist()
+    val cands = Dedup.minhashCandidatePairs(sigs, 16, 64)
+    sigs.unpersist(blocking = false)
+    val (verified, sh) =
+      Dedup.verifyPairsExactJaccardLazy(docs, "doc_id", "text", cands, 3, 0.5)
+    val plan = verified.queryExecution.executedPlan
+    val index = nodes(plan).collect {
+      case g: GenerateExec if g.generator.exists(_.isInstanceOf[ShingleHashes]) => g
+    }
+    assert(index.nonEmpty, s"no shingle-index explode in the verify plan:\n$plan")
+    index.foreach { g =>
+      assert(nodes(g).exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, s"verify-side shingle index is no longer candidate-pruned:\n$g")
+    }
+    sh.unpersist(blocking = false)
+    cands.unpersist(blocking = false)
   }
 
   test("incrementalDedupSurvivors is unchanged by the candidate-bounded verify, " +

@@ -264,9 +264,12 @@ class PlanSuite extends SparkSpec {
     val evalDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       .select(col("doc_id").as("eval_id"), col("text"))
     val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-    val plan = formatted(graft.pipeline.Decontaminate
-      .nearDupContaminationReport(train, "doc_id", "text", evalDocs,
-        "eval_id", "text"))
+    // the report's own plan: the returned report is a leaf
+    val (report, persisted) = graft.pipeline.Decontaminate
+      .nearDupContaminationReportLazy(train, "doc_id", "text", evalDocs,
+        "eval_id", "text", 64, 16, 3, 0.5, None)
+    val plan = formatted(report)
+    persisted.foreach(_.unpersist(blocking = false))
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"near-dup decontamination plans a product join:\n$plan")
