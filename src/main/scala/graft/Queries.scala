@@ -8,6 +8,7 @@ import org.apache.spark.ml.regression.DecisionTreeRegressor
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetUtils.materializeAtLeaf
 
 /** Query catalog backing SparkEntry. Each `q*` analytic query has an exact
   * DuckDB oracle (SparkEntry.oracleSql); float aggregates are rounded on
@@ -920,11 +921,7 @@ object Queries {
       .crossJoin(ids)
       .withColumn("rel",
         when(col("query_id") === col("doc_id"), 2.0).otherwise(1.0))
-    val out = Retrieval.rankMetrics(ranked, qrels, 10).orderBy("query_id")
-    out.persist()
-    out.count()
-    ranked.unpersist(blocking = false)
-    out
+    materializeAtLeaf(Retrieval.rankMetrics(ranked, qrels, 10).orderBy("query_id"), ranked)
   }
 
   /** Contrastive-retrieval training triples ([[Retrieval.hardNegatives]]

@@ -177,77 +177,80 @@ object Dedup {
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
     edges.persist()
-    var backing = materializeAtLeaf( // the persisted leaf behind `labels`
-      edges.select(col("src").as("id")).distinct().withColumn("component", col("id")))
-    var labels = backing
-    var iter = 0
-    var changed = 1L
-    while (iter < maxIter && changed > 0) {
-      val msgs = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("cand")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("cand").as("nmin"))
-      val propagated = labels.join(msgs, Seq("id"), "left")
-        .select(
-          col("id"),
-          col("component").as("old"),
-          when(col("nmin") < col("component"), col("nmin"))
-            .otherwise(col("component")).as("component"))
-      // pointer jumping: component := label(component). The lookup maps
-      // through the PREVIOUS round's labels (the persisted leaf-rooted
-      // frame) rather than `propagated` itself — self-joining the
-      // unpersisted `propagated` would evaluate its join+agg subtree
-      // twice per round. Every label value is a vertex id present in the
-      // table (labels start as ids and only ever take existing label
-      // values), so the lookup always hits; the coalesce is
-      // belt-and-braces for it. This is what makes long chains fold in
-      // log-ish rounds — propagation alone moves the min ONE hop per
-      // round, the shortcut roughly doubles the effective hop length.
-      // Skipped on the first two rounds: diameter<=2 graphs (the common
-      // near-dup case) converge there from propagation alone, so they
-      // never pay the extra join; deeper graphs still fold in
-      // O(log diameter)-ish rounds overall (diameter-64 chain: <=10,
-      // suite-pinned).
-      val proposed = if (iter < 2) propagated else propagated.join(
-        labels.select(col("id").as("component"), col("component").as("jump")),
-        Seq("component"), "left")
-        .select(
-          col("id"),
-          col("old"),
-          coalesce(least(col("component"), col("jump")), col("component"))
-            .as("component"))
-      // materialize the round at a leaf (the changed-count is the
-      // materializing action) and free the previous round's labels. The
-      // leaf RESETS the Catalyst plan: the round's plan embeds the
-      // previous labels twice (directly and via msgs), so chaining
-      // DataFrames would double the plan tree every round — analysis time
-      // goes exponential while the data stays tiny.
-      val (next, n) = materializeAtLeafCounting(
-        proposed, _.filter(col("component") =!= col("old")).count(), backing)
-      changed = n
-      backing = next
-      labels = next.select("id", "component")
-      iter += 1
-    }
-    val converged = changed == 0
-    if (!converged) {
-      // NB: labels still changed in the LAST round, so completeness
-      // cannot be confirmed (a zero-change confirming round is part of
-      // the budget — size maxIter as changing-rounds + 1)
-      val msg = s"connectedComponents could not CONFIRM convergence in " +
-        s"$maxIter rounds ($changed labels changed in the last round) — " +
-        "components may be split; raise maxIter (rounds grow with " +
-        "log(diameter), plus one zero-change confirming round)"
-      if (failOnNonConvergence) {
-        edges.unpersist(blocking = false)
-        backing.unpersist(blocking = false)
-        throw new IllegalStateException(msg)
+    try {
+      var backing = materializeAtLeaf( // the persisted leaf behind `labels`
+        edges.select(col("src").as("id")).distinct().withColumn("component", col("id")))
+      var labels = backing
+      var iter = 0
+      var changed = 1L
+      while (iter < maxIter && changed > 0) {
+        val msgs = edges
+          .join(labels.select(col("id").as("dst"), col("component").as("cand")), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min("cand").as("nmin"))
+        val propagated = labels.join(msgs, Seq("id"), "left")
+          .select(
+            col("id"),
+            col("component").as("old"),
+            when(col("nmin") < col("component"), col("nmin"))
+              .otherwise(col("component")).as("component"))
+        // pointer jumping: component := label(component). The lookup maps
+        // through the PREVIOUS round's labels (the persisted leaf-rooted
+        // frame) rather than `propagated` itself — self-joining the
+        // unpersisted `propagated` would evaluate its join+agg subtree
+        // twice per round. Every label value is a vertex id present in the
+        // table (labels start as ids and only ever take existing label
+        // values), so the lookup always hits; the coalesce is
+        // belt-and-braces for it. This is what makes long chains fold in
+        // log-ish rounds — propagation alone moves the min ONE hop per
+        // round, the shortcut roughly doubles the effective hop length.
+        // Skipped on the first two rounds: diameter<=2 graphs (the common
+        // near-dup case) converge there from propagation alone, so they
+        // never pay the extra join; deeper graphs still fold in
+        // O(log diameter)-ish rounds overall (diameter-64 chain: <=10,
+        // suite-pinned).
+        val proposed = if (iter < 2) propagated else propagated.join(
+          labels.select(col("id").as("component"), col("component").as("jump")),
+          Seq("component"), "left")
+          .select(
+            col("id"),
+            col("old"),
+            coalesce(least(col("component"), col("jump")), col("component"))
+              .as("component"))
+        // materialize the round at a leaf (the changed-count is the
+        // materializing action) and free the previous round's labels. The
+        // leaf RESETS the Catalyst plan: the round's plan embeds the
+        // previous labels twice (directly and via msgs), so chaining
+        // DataFrames would double the plan tree every round — analysis time
+        // goes exponential while the data stays tiny.
+        val (next, n) = materializeAtLeafCounting(
+          proposed, _.filter(col("component") =!= col("old")).count(), backing)
+        changed = n
+        backing = next
+        labels = next.select("id", "component")
+        iter += 1
       }
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+      val converged = changed == 0
+      if (!converged) {
+        // NB: labels still changed in the LAST round, so completeness
+        // cannot be confirmed (a zero-change confirming round is part of
+        // the budget — size maxIter as changing-rounds + 1)
+        val msg = s"connectedComponents could not CONFIRM convergence in " +
+          s"$maxIter rounds ($changed labels changed in the last round) — " +
+          "components may be split; raise maxIter (rounds grow with " +
+          "log(diameter), plus one zero-change confirming round)"
+        if (failOnNonConvergence) {
+          backing.unpersist(blocking = false)
+          throw new IllegalStateException(msg)
+        }
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+      }
+      // `labels` is a projection over the last round's persisted frame; hand
+      // the caller its own persisted copy and release the loop's blocks
+      (materializeAtLeaf(labels, edges, backing), iter, converged)
+    } catch { // a failed materialization frees its own frames; `edges` is ours
+      case e: Throwable => edges.unpersist(blocking = false); throw e
     }
-    // `labels` is a projection over the last round's persisted frame; hand
-    // the caller its own persisted copy and release the loop's blocks
-    (materializeAtLeaf(labels, edges, backing), iter, converged)
   }
 
   /** Near-dup-deduplicated corpus: one canonical (min-id) row survives per

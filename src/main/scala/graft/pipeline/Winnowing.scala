@@ -142,6 +142,17 @@ object Winnowing {
       w: Int,
       minShared: Long = 1L,
       maxDocFrequency: Long = DefaultMaxDocFrequency): DataFrame = {
+    val (pairs, fpAll) =
+      winnowOverlapPairsLazy(docs, idCol, textCol, k, w, minShared, maxDocFrequency)
+    materializeAtLeaf(pairs, fpAll)
+  }
+
+  /** Un-materialized [[winnowOverlapPairs]] plan plus the fingerprint
+    * table it persists (caller must unpersist) — PipelineSuite pins the
+    * pair join's shape on this.
+    */
+  private[graft] def winnowOverlapPairsLazy(docs: DataFrame, idCol: String, textCol: String,
+      k: Int, w: Int, minShared: Long, maxDocFrequency: Long): (DataFrame, DataFrame) = {
     require(minShared > 0, s"minShared must be positive, got $minShared")
     // persist the PRE-guard set: it feeds the df histogram AND (through
     // the guard anti-join) both sides of the pair join — without the
@@ -152,22 +163,20 @@ object Winnowing {
       .select(col("doc_id").as("id"), col("fp"))
       .distinct()
       .persist()
-    try {
-      val fp =
-        if (maxDocFrequency <= 0) fpAll
-        else {
-          val hot = fpAll.groupBy("fp").agg(count(lit(1)).as("df"))
-            .filter(col("df") > maxDocFrequency)
-            .select("fp")
-          fpAll.join(broadcast(hot), Seq("fp"), "left_anti")
-        }
-      val pairs = fp.as("a")
-        .join(fp.as("b").hint("shuffle_hash"),
-          col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= minShared)
-      materializeAtLeaf(pairs)
-    } finally fpAll.unpersist(blocking = false)
+    val fp =
+      if (maxDocFrequency <= 0) fpAll
+      else {
+        val hot = fpAll.groupBy("fp").agg(count(lit(1)).as("df"))
+          .filter(col("df") > maxDocFrequency)
+          .select("fp")
+        fpAll.join(broadcast(hot), Seq("fp"), "left_anti")
+      }
+    val pairs = fp.as("a")
+      .join(fp.as("b").hint("shuffle_hash"),
+        col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+    (pairs, fpAll)
   }
 }

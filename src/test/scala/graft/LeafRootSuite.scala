@@ -3,7 +3,7 @@ package graft
 import graft.pipeline.{Decontaminate, Dedup, Sampling}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 
 /** Materialized pipeline results are rooted at a leaf: a daily
   * incremental dedup chain's plans stay the size of one stage however
@@ -18,6 +18,13 @@ class LeafRootSuite extends SparkSpec {
     * it); rooted at a leaf it prints 16 on both days.
     */
   private val PlanLineCeiling = 64
+
+  /** Ceiling on the plans composed on the survivors, where downstream
+    * stages pay for the survivors' plan: a `hashSplit` split and the
+    * extended corpus artifact. Before leaf-rooting they printed 12,132 and
+    * 12,178 lines on day 0, 17,573 and 17,619 on day 1; now 21 and 72.
+    */
+  private val ComposedPlanLineCeiling = 256
 
   test("a two-day incremental dedup chain keeps its plans small and leaks no cache") {
     val s = spark
@@ -46,21 +53,54 @@ class LeafRootSuite extends SparkSpec {
       val before = sc.getPersistentRDDs.keySet.toSet
       val survivors: DataFrame = Dedup.incrementalDedupSurvivors(
         corpusDf, batches(d), "doc_id", "text", corpusBanded = Some(art))
-      Sampling.hashSplit(survivors, "doc_id", Seq(0.8, 0.1, 0.1)).zipWithIndex.foreach {
+      val splits = Sampling.hashSplit(survivors, "doc_id", Seq(0.8, 0.1, 0.1))
+      splits.zipWithIndex.foreach {
         case (split, i) => split.write.parquet(path(s"survivors-$d/split=$i"))
       }
-      Dedup.extendCorpusArtifact(art, survivors, "doc_id", "text")
-        .write.parquet(path(s"artifact-${d + 1}"))
+      val extended = Dedup.extendCorpusArtifact(art, survivors, "doc_id", "text")
+      extended.write.parquet(path(s"artifact-${d + 1}"))
       assert(spark.read.parquet(path(s"survivors-$d")).count() === 8)
-      val n = survivors.queryExecution.explainString(FormattedMode).split('\n').length
+      val n = Seq(survivors, splits.head, extended)
+        .map(_.queryExecution.explainString(FormattedMode).split('\n').length)
       survivors.unpersist(blocking = true)
       assert(sc.getPersistentRDDs.keySet.toSet === before, s"day $d left caches behind")
       n
     }
-    info(s"survivors plan lines per day: ${lines.mkString(", ")}")
-    assert(lines.forall(_ <= PlanLineCeiling),
-      s"survivors plans of ${lines.mkString(", ")} lines exceed $PlanLineCeiling")
-    assert(lines(1) <= lines(0), s"day 1's plan grew: ${lines.mkString(" -> ")}")
+    info(s"plan lines per day (survivors, split, extended artifact): ${lines.mkString(", ")}")
+    for ((name, ceiling, i) <- Seq(
+        ("survivors", PlanLineCeiling, 0),
+        ("hashSplit split", ComposedPlanLineCeiling, 1),
+        ("extended artifact", ComposedPlanLineCeiling, 2))) {
+      val perDay = lines.map(_(i))
+      assert(perDay.forall(_ <= ceiling),
+        s"$name plans of ${perDay.mkString(", ")} lines exceed $ceiling")
+      assert(perDay(1) <= perDay(0), s"day 1's $name plan grew: ${perDay.mkString(" -> ")}")
+    }
+  }
+
+  test("connected components that fail leave no cache behind") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val chain = (0L until 8L).map(i => (i, i + 1)).toDF("a", "b")
+    val boom = udf { (x: Long) =>
+      if (x == 5L) throw new IllegalStateException("boom")
+      x
+    }
+    val failures: Seq[(String, () => Any)] = Seq(
+      // the first materialization over the persisted edges throws
+      "failing input" -> (() => Dedup.connectedComponentsWithStats(
+        chain.withColumn("b", boom(col("b"))), "a", "b")),
+      // labels still change in the last allowed round: the edges cache
+      // built fine and must be released on the way out
+      "non-convergence" -> (() => Dedup.connectedComponentsWithStats(
+        chain, "a", "b", maxIter = 1)))
+    for ((name, run) <- failures) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      intercept[Exception](run())
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"$name left persisted RDDs: $left")
+    }
   }
 
   test("a leaf-rooted result composes with AQE off (planned sort orders over aliased columns)") {

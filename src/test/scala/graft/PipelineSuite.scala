@@ -1392,11 +1392,16 @@ class PipelineSuite extends SparkSpec {
       minShared = 1L, maxDocFrequency = 0L)
     try assert(unguarded.count() >= 1L)
     finally unguarded.unpersist(blocking = false)
-    // and no cartesian anywhere in the pair plan
-    val probe = Winnowing.winnowOverlapPairs(docs, "doc_id", "text", k, w)
+    // and no cartesian anywhere in the pair plan — read on the pair
+    // query itself: the returned pairs are a leaf over their rows
+    val (probe, probeFp) = Winnowing.winnowOverlapPairsLazy(docs, "doc_id", "text", k, w,
+      1L, Winnowing.DefaultMaxDocFrequency)
     try {
-      assert(!probe.queryExecution.executedPlan.toString.contains("CartesianProduct"))
-    } finally probe.unpersist(blocking = false)
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(plan.contains("ShuffledHashJoin") && !plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"),
+        s"winnowed pair join is not a shuffled hash join:\n$plan")
+    } finally probeFp.unpersist(blocking = false)
     // fingerprint selection itself is map-side end to end — adjacent
     // windows' repeat selections collapse per row (array_distinct), so
     // NO shuffle exists to collapse them globally
